@@ -22,6 +22,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from data_quality_spark.colmemo import memo
+
 SYMBOL_CLASS = r"[#@%^*~|<>+=_{}\[\]\\]"
 _PY_SYMBOL = re.compile(SYMBOL_CLASS)
 # re.ASCII: python \s is Unicode-aware (splits NBSP etc.) while the Java
@@ -168,6 +170,9 @@ FEATURES = {
 }
 
 
+_TOKS, _LINES = "__qf_toks", "__qf_lines"
+
+
 def with_features(df, text_col: str = "text", prefix: str = "f_"):
     """Engine: attach every feature column, tokenizing ONCE.
 
@@ -178,14 +183,23 @@ def with_features(df, text_col: str = "text", prefix: str = "f_"):
     (fresh lambda variable ids defeat expression equality), so without this
     fusion every feature re-splits the text.
     """
+    staged, feature_cols = memo(
+        ("textstats.with_features", text_col, prefix),
+        lambda: _feature_cols(text_col, prefix),
+    )
+    return df.withColumns(staged).withColumns(feature_cols).drop(_TOKS, _LINES)
+
+
+def _feature_cols(text_col: str, prefix: str) -> tuple[dict, dict]:
+    """(staged token/line arrays, feature columns over them) for
+    with_features — built once per JVM (colmemo)."""
     text = F.col(text_col)
-    toks_c, lines_c = "__qf_toks", "__qf_lines"
-    staged = df.withColumns({
-        toks_c: col_tokens(text),
-        lines_c: F.filter(F.split(text, r"\n"), lambda x: x != ""),
-    })
-    toks = F.col(toks_c)
-    lines = F.col(lines_c)
+    staged = {
+        _TOKS: col_tokens(text),
+        _LINES: F.filter(F.split(text, r"\n"), lambda x: x != ""),
+    }
+    toks = F.col(_TOKS)
+    lines = F.col(_LINES)
     n_words = F.size(toks)
     total_len = F.aggregate(
         F.transform(toks, lambda t: F.length(t).cast("long")),
@@ -214,7 +228,7 @@ def with_features(df, text_col: str = "text", prefix: str = "f_"):
             n_words > 0, n_sw.cast("double") / n_words
         ).otherwise(F.lit(0.0)),
     }
-    return staged.withColumns(feature_cols).drop(toks_c, lines_c)
+    return staged, feature_cols
 
 
 def py_features(text: str, prefix: str = "f_") -> dict:

@@ -105,19 +105,6 @@ def _sample_partitions(df: DataFrame, sort_cols: list[str], n: int) -> list:
     return sorted(rows, key=lambda r: r["__pid"])
 
 
-def range_boundaries(
-    df: DataFrame, sort_cols: list[str], n: int
-) -> list:
-    """Literal range-boundary rows for (sort_cols): each nonempty sampled
-    partition's minimum (the first is a lower bound, not a cut point).
-    Boundaries containing a NULL field are dropped — struct comparison
-    against them is not total, and NULL keys belong to partition 0 under
-    asc-nulls-first anyway."""
-    rows = _sample_partitions(df, sort_cols, n)
-    bounds = [r["__min"] for r in rows[1:]]
-    return [b for b in bounds if all(b[c] is not None for c in sort_cols)]
-
-
 def pid_expr(
     boundaries: list, sort_cols: list[str], schema
 ) -> Column:

@@ -929,16 +929,6 @@ def train_pq(
     return books
 
 
-def pq_codebooks_to_df(spark, codebooks) -> DataFrame:
-    rows = [
-        (s, j, p, float(val))
-        for s, book in enumerate(codebooks)
-        for j, c in enumerate(book)
-        for p, val in enumerate(c)
-    ]
-    return spark.createDataFrame(rows, "sub int, code int, pos int, val double")
-
-
 def pq_topk_adc(
     codes_df: DataFrame,
     id_col: str,

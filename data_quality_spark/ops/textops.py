@@ -2395,9 +2395,11 @@ def weighted_sample(
     Same determinism contract as sample_stratified: the priority is a
     pure function of the row id — stable across runs, partitionings, and
     engines (md5-portable, oracle-reproducible), and different salts give
-    independent samples. Weights must be integers ≥ 1: w = 0 would
-    floor-divide to NULL in Spark but ERROR in DuckDB (engine-divergent),
-    so it's validated eagerly (one tiny agg) instead.
+    independent samples. Weights must be non-NULL integers ≥ 1: w = 0
+    would floor-divide to NULL in Spark but ERROR in DuckDB, and a NULL
+    weight gives a NULL priority that Spark sorts first and DuckDB last
+    (engine-divergent both), so both are validated eagerly (one tiny agg)
+    instead.
 
     Plan shape: map-only priority projection + TakeOrderedAndProject on
     (prio, id) — per-partition top-k heaps merged on the driver, never a
@@ -2408,7 +2410,16 @@ def weighted_sample(
     """
     from data_quality_spark.ops.hashing import portable_hash64
 
-    wrow = df.agg(F.min(F.col(weight_col)).alias("mn")).first()
+    # F.min ignores NULLs, so NULL weights are counted separately
+    wrow = df.agg(
+        F.min(F.col(weight_col)).alias("mn"),
+        F.count_if(F.col(weight_col).isNull()).alias("n_null"),
+    ).first()
+    if wrow["n_null"]:
+        raise ValueError(
+            f"weighted_sample(): {wrow['n_null']} row(s) have a NULL weight;"
+            " fill or filter them first"
+        )
     if wrow["mn"] is not None and wrow["mn"] < 1:
         raise ValueError(
             f"weighted_sample(): weights must be ≥ 1 (got min={wrow['mn']});"

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_quality_spark.colmemo import memo
+
 # Shared grammar — ALL paths compile exactly these strings (byte parity).
 MAIN_PATTERN = r"<main(?:\s[^>]*)?>(.*)</main>"
 PARA_PATTERN = r"<p(?:\s[^>]*)?>(.*?)</p>"
@@ -132,13 +134,18 @@ def with_extracted(
 ) -> DataFrame:
     """ENGINE PATH: add `out_col` = extracted text (coalesced with
     `fallback_col` when extraction yields NULL), evaluating the
-    full-document regex exactly once per row via a staged projection."""
+    full-document regex exactly once per row via a staged projection.
+    Both projected Columns are built once per JVM (colmemo)."""
     aux = f"__aux_m0_{out_col}"
-    df = df.withColumn(aux, _m0_expr(F.col(html_col)))
-    ext = _extract_from_m0(F.col(html_col), F.col(aux))
-    if fallback_col is not None:
-        ext = F.coalesce(ext, F.col(fallback_col))
-    return df.withColumn(out_col, ext).drop(aux)
+
+    def build():
+        ext = _extract_from_m0(F.col(html_col), F.col(aux))
+        if fallback_col is not None:
+            ext = F.coalesce(ext, F.col(fallback_col))
+        return _m0_expr(F.col(html_col)), ext
+
+    m0, ext = memo(("extract.with_extracted", html_col, out_col, fallback_col), build)
+    return df.withColumn(aux, m0).withColumn(out_col, ext).drop(aux)
 
 
 def native_extract(html_col: Column) -> Column:

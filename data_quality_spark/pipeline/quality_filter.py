@@ -15,6 +15,10 @@ engine's replacement of the reference's per-check scans, check.py:84-126):
 
 Scale design:
   * no Python in the row path except the two model UDFs (Arrow-batched)
+  * per-call plan building is driver-side py4j traffic (each F.* call is
+    a gateway round trip — thousands per call, paid before Spark runs
+    anything), so the stage chain's Column trees are built once per JVM
+    (colmemo) and kept-row counts ride the kept write as an Observation
   * dup-url window partitions by url (high cardinality — no host skew)
   * AQE + adaptive skew-join on (session.py); salted host aggregation in
     metrics via host hash bucket
@@ -26,16 +30,16 @@ Scale design:
 
 from __future__ import annotations
 
+import copy
 import json
-import os
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from data_quality_spark.colmemo import memo
 from data_quality_spark.functions import models, scrub, textstats
 from data_quality_spark.pipeline import extract, fsio
-from data_quality_spark.rules import checks as C
 from data_quality_spark.rules.core import Rule, RuleEngine, is_empty, not_empty
 
 
@@ -119,7 +123,19 @@ def quality_rules(
 
     pii_col: name of a precomputed native_pii_found column — the pipeline
     passes 'pii_found' so the PII detector evaluates ONCE and is shared
-    with the scrub gate (standalone use computes it inline)."""
+    with the scrub gate (standalone use computes it inline).
+
+    The rule Columns are built once per JVM per (cfg, pii_col) (colmemo);
+    every call returns fresh Rule copies, so a caller that reassigns a
+    rule's fields never reaches the memo or a later call."""
+    return [
+        copy.copy(r)
+        for r in memo(("qf.quality_rules", cfg, pii_col),
+                      lambda: _build_quality_rules(cfg, pii_col))
+    ]
+
+
+def _build_quality_rules(cfg: QFConfig, pii_col: str | None) -> list[Rule]:
     fired = lambda c: F.coalesce(c, F.lit(False))  # noqa: E731
     pii_viol = (
         fired(F.col(pii_col))
@@ -236,6 +252,7 @@ def quality_rules(
     for r in R:
         if r.rule_id in content:
             r.violation = (~is_empty("text_extracted")) & r.violation
+        r.flag_col()  # built here once; the copies quality_rules hands out share it
     return R
 
 
@@ -281,26 +298,35 @@ def with_model_scores(df: DataFrame, cfg: QFConfig = DEFAULT_CONFIG) -> DataFram
             )
         w6, bias6 = classifier_weights_local(wdf, CLF_BUCKETS)
         clf = ([int(v) for v in w6], bias6, CLF_BUCKETS)
-    df = df.withColumn("_m", models.spark_udf(clf=clf)(F.col("text_extracted")))
+    clf_key = None if clf is None else (tuple(clf[0]), clf[1], clf[2])
+    udf_col, model_cols, clf_score = memo(
+        ("qf.model_cols", clf_key), lambda: _model_cols(clf)
+    )
+    df = df.withColumn("_m", udf_col).select("*", *model_cols).drop("_m")
+    if clf_score is not None:
+        df = df.withColumn("clf_score", clf_score)
+    return df
+
+
+def _model_cols(clf) -> tuple:
+    """(fused model UDF Column, its unpacked result columns, clf_score or
+    None) for with_model_scores — built once per JVM per classifier."""
     model_cols = [
         F.col("_m.lang_pred").alias("lang_pred"),
         F.col("_m.lang_margin").alias("lang_margin"),
         F.col("_m.ppl").alias("ppl"),
     ]
+    clf_score = None
     if clf is not None:
         model_cols += [
             F.col("_m.clf_n_toks").alias("clf_n_toks"),
             F.col("_m.clf_logit").alias("clf_logit"),
         ]
-    df = df.select("*", *model_cols).drop("_m")
-    if clf is not None:
-        df = df.withColumn(
-            "clf_score",
-            F.round(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("clf_logit"))), 6
-            ),
+        clf_score = F.round(
+            F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("clf_logit"))), 6
         )
-    return df
+    udf_col = models.spark_udf(clf=clf)(F.col("text_extracted"))
+    return udf_col, model_cols, clf_score
 
 
 # On-disk ceiling for auto-broadcasting the rank artifact. A forced
@@ -416,11 +442,11 @@ def annotate_rowwise(df: DataFrame, cfg: QFConfig, rules) -> DataFrame:
     # staged extraction: ONE full-document regex per row (extract.py perf
     # shape note); NULL extract (no <main>) falls back to the raw text column
     df = extract.with_extracted(df, "html", "text_extracted", "text")
+    ppl_cuts = (cfg.ppl_head, cfg.ppl_tail)
+    tail = memo(("qf.rowwise_tail", ppl_cuts), lambda: _tail_cols(*ppl_cuts))
     if cfg.drop_noindex:
         # detector must read the raw html; compute before the payload drop
-        df = df.withColumn(
-            "noindex_found", extract.native_noindex(F.col("html"))
-        )
+        df = df.withColumn("noindex_found", tail["noindex_found"])
     # html (and by default the raw text fallback) served their purpose —
     # dropping the payload columns here keeps them out of every downstream
     # stage's row buffers (measured ~6% of 8-core pipeline time for text)
@@ -429,28 +455,44 @@ def annotate_rowwise(df: DataFrame, cfg: QFConfig, rules) -> DataFrame:
         df = df.drop("text")
     df = textstats.with_features(df, "text_extracted")
     df = with_model_scores(df, cfg)
-    # CCNet-style quality bucket by LM perplexity (head = cleanest tercile);
-    # annotation only — training-data consumers select buckets downstream
-    df = df.withColumn(
-        "ppl_bucket",
-        F.when(F.col("ppl") <= cfg.ppl_head, "head")
-        .when(F.col("ppl") <= cfg.ppl_tail, "middle")
+    df = df.withColumn("ppl_bucket", tail["ppl_bucket"])
+    df = df.withColumn("pii_found", tail["pii_found"])
+    df = RuleEngine(rules).annotate(df)
+    df = df.withColumn("text_scrubbed", tail["text_scrubbed"])
+    return df.withColumn("part_id", tail["part_id"])
+
+
+def _tail_cols(ppl_head: float, ppl_tail: float) -> dict:
+    """The per-row columns annotate_rowwise adds around the model and rule
+    stages — built once per JVM per perplexity cut pair (colmemo)."""
+    return {
+        # robots-noindex detector over the raw html (drop_noindex only)
+        "noindex_found": extract.native_noindex(F.col("html")),
+        # CCNet-style quality bucket by LM perplexity (head = cleanest
+        # tercile); annotation only — training-data consumers select
+        # buckets downstream
+        "ppl_bucket": F.when(F.col("ppl") <= ppl_head, "head")
+        .when(F.col("ppl") <= ppl_tail, "middle")
         .otherwise("tail"),
-    )
-    # ONE PII-detector evaluation, shared by the pii rule and the scrub
-    # gate (annotation column — downstream consumers can filter on it)
-    df = df.withColumn(
-        "pii_found",
-        F.coalesce(scrub.native_pii_found(F.col("text_extracted")), F.lit(False)),
-    )
-    eng = RuleEngine(rules)
-    df = eng.annotate(df)
-    df = df.withColumn(
-        "text_scrubbed",
-        scrub.native_scrub(F.col("text_extracted"), found=F.col("pii_found")),
-    )
-    # lineage (north_rule: per-partition lineage + metrics)
-    return df.withColumn("part_id", F.spark_partition_id())
+        # ONE PII-detector evaluation, shared by the pii rule and the scrub
+        # gate (annotation column — downstream consumers can filter on it)
+        "pii_found": F.coalesce(
+            scrub.native_pii_found(F.col("text_extracted")), F.lit(False)
+        ),
+        "text_scrubbed": scrub.native_scrub(
+            F.col("text_extracted"), found=F.col("pii_found")
+        ),
+        # lineage (north_rule: per-partition lineage + metrics)
+        "part_id": F.spark_partition_id(),
+    }
+
+
+def _kept_count_aggs(pending: tuple) -> list:
+    """One `sum(bucket = b)` aggregate per pending bucket, named `b<b>` —
+    the kept write's Observation (built once per JVM per pending set)."""
+    return memo(("qf.kept_count_aggs", pending), lambda: [
+        F.sum((F.col("bucket") == b).cast("long")).alias(f"b{b}") for b in pending
+    ])
 
 
 def metrics_by_partition(
@@ -462,15 +504,21 @@ def metrics_by_partition(
     array_contains over the fired array. Map-side partial agg → tiny shuffle.
     group_cols extends the grouping (e.g. ["bucket", "part_id"] so the
     resumable runner can write metrics partitioned by checkpoint bucket)."""
-    rules = quality_rules(cfg)
+    has_src = "src_file" in ann.columns
+    aggs = memo(("qf.metrics_aggs", cfg, has_src),
+                lambda: _metrics_aggs(cfg, has_src))
+    return ann.groupBy(*(group_cols or ["part_id"])).agg(*aggs)
+
+
+def _metrics_aggs(cfg: QFConfig, has_src: bool) -> list:
     aggs = [F.count(F.lit(1)).alias("n_rows"),
             F.sum((~F.col("keep")).cast("long")).alias("n_dropped")] + [
         F.sum(F.array_contains("fired_rules", r.rule_id).cast("long")).alias(r.rule_id)
-        for r in rules
+        for r in quality_rules(cfg)
     ]
-    if "src_file" in ann.columns:
+    if has_src:
         aggs.append(F.collect_set("src_file").alias("src_files"))
-    return ann.groupBy(*(group_cols or ["part_id"])).agg(*aggs)
+    return aggs
 
 
 def rule_ablation(ann: DataFrame) -> DataFrame:
@@ -735,7 +783,7 @@ def run_pipeline(
         # clear the pending partitions up front: dynamic overwrite only
         # replaces partitions the job WRITES, so a pending bucket that now
         # keeps zero rows would otherwise leave a crashed earlier attempt's
-        # stale files in place (and be mis-counted as this run's output)
+        # stale files in place
         for sub in ("kept", "metrics"):
             for b in pending:
                 fsio.delete(spark, fsio.join(out_dir, sub, f"bucket={b}"))
@@ -755,8 +803,12 @@ def run_pipeline(
                         "url",
                         "text_scrubbed",
                     ).drop("maybe_seen")
+            # per-bucket kept counts, computed by the kept write itself:
+            # one sum per pending bucket rides the write's own tasks, so
+            # no job reads the output back
+            kept_obs = Observation("kept_rows")
             (
-                kept_df
+                kept_df.observe(kept_obs, *_kept_count_aggs(tuple(pending)))
                 .write.mode("overwrite")
                 .partitionBy("bucket")
                 .parquet(kept_root)
@@ -771,25 +823,13 @@ def run_pipeline(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
             ann.unpersist()
-        # per-bucket kept counts from the written (columnar, slim) output.
-        # An all-dropped run writes no bucket=* partitions at all — checked
-        # explicitly so ONLY that case yields zero counts; any real read
-        # failure propagates instead of silently corrupting the manifest
-        # (a swallowed transient error would record pending buckets as done
-        # with rows_kept=0)
-        if fsio.has_glob(spark, fsio.join(kept_root, "bucket=*")):
-            counts = {
-                r["bucket"]: r["n"]
-                for r in spark.read.parquet(kept_root)
-                .where(F.col("bucket").isin(pending))
-                .groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        else:
-            counts = {}
+        # the write succeeded (a failed write raised above, before any
+        # manifest update), so the observed sums cover every kept row; a
+        # bucket with no kept rows sums NULL, and a plan the optimizer
+        # proved empty reports no metrics at all — both are zero
+        counts = kept_obs.get
         for b in pending:
-            n_kept = int(counts.get(b, 0))
+            n_kept = int(counts.get(f"b{b}") or 0)
             done[f"bucket={b}"] = {"rows_kept": n_kept}
             stats["buckets_done"] += 1
             stats["rows_kept"] += n_kept

@@ -62,12 +62,6 @@ def to_ts(col: str, fmt: str | None = None) -> Column:
     return F.try_to_timestamp(c.cast("string"), F.lit(fmt))
 
 
-def _ts_or_passthrough(df_col_type: str | None, col: str, fmt: str | None) -> Column:
-    # If the column is already a timestamp (our fixed-schema tables), skip
-    # the parse; the reference always parses because warehouses hand it strings.
-    return to_ts(col, fmt)
-
-
 def norm_key(c: Column | str, dtype=None) -> Column:
     """String-cast a key column with float normalization: strip trailing
     zeros after the decimal point and a bare '.0…' tail, so a double FK of

@@ -28,6 +28,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_quality_spark.colmemo import memo
+
 # ---------------------------------------------------------------------------
 # Missing-value semantics — NULL ∪ '' (reference utils.py:99-118)
 # ---------------------------------------------------------------------------
@@ -73,10 +75,16 @@ class Rule:
     output_columns: list[str] | None = None
     max_rows: int = 100
 
+    # (violation, flag Column) built from it: copies of a Rule share the
+    # flag, and reassigning `violation` invalidates it
+    _flag: tuple | None = field(default=None, init=False, repr=False, compare=False)
+
     def flag_col(self) -> Column:
         # coalesce(False): a NULL verdict is "not violated", matching the
         # reference's coalesce(cmp, false) (dates_order.py:23-32).
-        return F.coalesce(self.violation, F.lit(False))
+        if self._flag is None or self._flag[0] is not self.violation:
+            self._flag = (self.violation, F.coalesce(self.violation, F.lit(False)))
+        return self._flag[1]
 
 
 @dataclass
@@ -125,8 +133,8 @@ class RuleEngine:
         single whole-stage-codegen projection.
         """
         df = self._prepared(df)
-        flagged = df.select(
-            "*", *[r.flag_col().alias(self._flag_name(r)) for r in self.rules]
+        flagged = df.withColumns(
+            {self._flag_name(r): r.flag_col() for r in self.rules}
         )
         # helper columns added by prepare transforms (convention: __aux_*)
         # are internal — consumed by the flag projection, then dropped.
@@ -143,6 +151,16 @@ class RuleEngine:
         the array in place with array_compact(when...).
         """
         flagged = self.flags(df)
+        key = tuple((r.rule_id, r.description, r.severity) for r in self.rules)
+        out = flagged
+        for name, col in memo(("rules.annotate", key), self._annotate_cols):
+            out = out.withColumn(name, col)
+        return out.drop(*[self._flag_name(r) for r in self.rules])
+
+    def _annotate_cols(self) -> tuple:
+        """((name, Column), ...) annotate derives from the flag columns.
+        They depend only on each rule's (id, description, severity), so
+        they are built once per JVM per rule set (colmemo)."""
         fired = F.array_compact(
             F.array(
                 *[
@@ -171,16 +189,12 @@ class RuleEngine:
                 )
             ),
         )
-        out = (
-            flagged.withColumn(self.FIRED, fired)
-            .withColumn(self.FIRED_DESC, desc)
-            .withColumn(self.KEEP, F.size(fired_fail) == 0)
-            .withColumn(
-                self.ONLY_WARNING,
-                (F.size(fired) > 0) & (F.size(fired_fail) == 0),
-            )
+        return (
+            (self.FIRED, fired),
+            (self.FIRED_DESC, desc),
+            (self.KEEP, F.size(fired_fail) == 0),
+            (self.ONLY_WARNING, (F.size(fired) > 0) & (F.size(fired_fail) == 0)),
         )
-        return out.drop(*[self._flag_name(r) for r in self.rules])
 
     def metrics(self, df: DataFrame, flagged: DataFrame | None = None) -> DataFrame:
         """Per-rule KO counts in ONE aggregate scan.

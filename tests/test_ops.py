@@ -3305,6 +3305,25 @@ def test_weighted_sample_determinism_and_bias(spark):
             "id", "w", k=1)
 
 
+def test_weighted_sample_rejects_null_weights(spark):
+    """A NULL weight gives a NULL priority, which Spark sorts first and the
+    DuckDB twin sorts last — the engines would return different samples.
+    F.min skips NULLs, so the weight check counts them separately: one
+    NULL among valid weights raises, and so does an all-NULL column."""
+    import pytest as _pytest
+
+    mixed = spark.createDataFrame(
+        [(1, 5), (2, None), (3, 1)], "id long, w long")
+    with _pytest.raises(ValueError, match="1 row\\(s\\) have a NULL weight"):
+        T.weighted_sample(mixed, "id", "w", k=2)
+    all_null = spark.createDataFrame([(1, None), (2, None)], "id long, w long")
+    with _pytest.raises(ValueError, match="NULL weight"):
+        T.weighted_sample(all_null, "id", "w", k=1)
+    # valid weights still sample
+    ok = mixed.where("w IS NOT NULL")
+    assert len(T.weighted_sample(ok, "id", "w", k=2).collect()) == 2
+
+
 def test_embedding_decontaminate(spark):
     """Exact copies flag contaminated with the right source; orthogonal
     eval vectors don't; the (cos, train_id) tie rule picks the larger

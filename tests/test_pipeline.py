@@ -51,6 +51,23 @@ def _merged(engine_ann, oracle_ann):
     return e, o
 
 
+def _assert_manifest_matches_kept(out):
+    """Every bucket's manifest rows_kept (counted by the kept write's
+    Observation) equals the rows actually written under kept/bucket=b,
+    read back from the parquet footers."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    m = json.load(open(os.path.join(out, "_manifest.json")))
+    buckets = [k for k in m if k.startswith("bucket=")]
+    assert buckets
+    for k in buckets:
+        files = glob.glob(os.path.join(out, "kept", k, "*.parquet"))
+        written = sum(pq.read_metadata(f).num_rows for f in files)
+        assert m[k]["rows_kept"] == written, (k, m[k], written)
+
+
 def test_keep_drop_agreement(engine_ann, oracle_ann):
     e, o = _merged(engine_ann, oracle_ann)
     agree = (e["keep"].values == o["keep"].values).mean()
@@ -265,6 +282,8 @@ def test_pipeline_dedup_stage(spark, fixture_path, tmp_path):
     s_plain = run_pipeline(spark, dup_path, out_plain, n_buckets=2)
     s_dedup = run_pipeline(spark, dup_path, out_dedup, n_buckets=2, dedup="exact")
     assert s_dedup["rows_kept"] < s_plain["rows_kept"]
+    _assert_manifest_matches_kept(out_plain)
+    _assert_manifest_matches_kept(out_dedup)
     kept = spark.read.parquet(os.path.join(out_dedup, "kept"))
     n = kept.count()
     n_distinct = kept.select("text_scrubbed").distinct().count()
@@ -345,6 +364,8 @@ def test_pipeline_bloom_cross_run_dedup(spark, fixture_path, tmp_path):
     # are texts A dropped via url-DEPENDENT rules (B has fresh unique urls)
     # — which by construction are not in the index
     assert s2["rows_kept"] < s_ctl["rows_kept"]
+    _assert_manifest_matches_kept(out_a)
+    _assert_manifest_matches_kept(out_b)
     kept_a = {r["text_scrubbed"] for r in
               spark.read.parquet(os.path.join(out_a, "kept"))
               .select("text_scrubbed").collect()}
@@ -527,7 +548,8 @@ def test_pipeline_resume_clears_stale_partition(spark, fixture_path, tmp_path):
 
 def test_pipeline_all_dropped_run(spark, tmp_path):
     """A run where EVERY row fails the filter must complete cleanly with
-    zero kept rows and a full manifest, not crash on the empty read-back."""
+    zero kept rows and a full manifest: the kept write's observed sums
+    over no rows are NULL, and count as zero."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -549,6 +571,7 @@ def test_pipeline_all_dropped_run(spark, tmp_path):
     m = json.load(open(os.path.join(out, "_manifest.json")))
     assert all(v["rows_kept"] == 0 for k, v in m.items()
                if k.startswith("bucket="))
+    _assert_manifest_matches_kept(out)
 
 
 def test_metrics_by_partition(spark, fixture_path):
@@ -964,3 +987,168 @@ def test_resume_pins_n_buckets(spark, fixture_path, tmp_path):
     # same geometry resumes fine (everything skipped)
     s = run_pipeline(spark, fixture_path, out, n_buckets=4)
     assert s["buckets_skipped"] == 4 and s["buckets_done"] == 0
+
+
+def test_pipeline_failed_kept_write_leaves_no_manifest(
+    spark, fixture_path, tmp_path, monkeypatch
+):
+    """The kept counts come from the write's Observation, so a failed write
+    must raise out of run_pipeline before the manifest records any bucket
+    as done; the next run then recomputes every bucket."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out = str(tmp_path / "qf_fail")
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *a, **kw):
+        if path.endswith("kept"):
+            raise RuntimeError("kept write failed")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="kept write failed"):
+        run_pipeline(spark, fixture_path, out, n_buckets=2)
+    assert not os.path.exists(os.path.join(out, "_manifest.json"))
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    s = run_pipeline(spark, fixture_path, out, n_buckets=2)
+    assert s["buckets_done"] == 2 and s["rows_kept"] > 0
+    _assert_manifest_matches_kept(out)
+
+
+# -- expression memo (colmemo): Column trees are built once per JVM ---------
+
+
+def _digest(df):
+    """(row count, order-independent hash of every column)."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
+    ).first()
+    return int(row["n"]), int(row["h"] or 0)
+
+
+def test_memo_interleaved_configs_match_fresh_builds(spark, fixture_path):
+    """Two configs interleaved in one session each get their own rule set,
+    and every memoized annotation hash-equals a build from an empty memo."""
+    from data_quality_spark import colmemo
+    from data_quality_spark.pipeline.quality_filter import (
+        DEFAULT_CONFIG,
+        QFConfig,
+        quality_rules,
+    )
+
+    cfg2 = QFConfig(badwords=("casino",), min_lang_margin=0.05)
+    ids = {c: [r.rule_id for r in quality_rules(c, pii_col="pii_found")]
+           for c in (DEFAULT_CONFIG, cfg2)}
+    assert "badwords_found" in ids[cfg2] and "lang_low_confidence" in ids[cfg2]
+    assert "badwords_found" not in ids[DEFAULT_CONFIG]
+
+    def ann(cfg):
+        df = annotate_pages(spark.read.parquet(fixture_path), cfg)
+        return list(df.columns), _digest(df)
+
+    seq = [DEFAULT_CONFIG, cfg2, DEFAULT_CONFIG, cfg2]
+    memoized = [ann(c) for c in seq]
+    n = colmemo.size()
+    assert [ann(c) for c in seq] == memoized and colmemo.size() == n
+    fresh = []
+    for c in seq:
+        colmemo.clear()
+        fresh.append(ann(c))
+    assert fresh == memoized
+    assert memoized[0] != memoized[1]  # the configs really differ
+    assert "f_n_words" in memoized[0][0] and "keep" in memoized[1][0]
+    # a config holding a list (unhashable) still builds, outside the memo
+    n = colmemo.size()
+    listed = quality_rules(QFConfig(badwords=["casino"]))
+    assert "badwords_found" in [r.rule_id for r in listed]
+    assert colmemo.size() == n
+
+
+def test_memo_mutated_rule_does_not_leak(spark):
+    """quality_rules hands out copies: reassigning a returned Rule's fields
+    (or editing the returned list) never reaches the next call."""
+    from data_quality_spark.pipeline.quality_filter import quality_rules
+    from data_quality_spark.rules.core import Rule
+
+    first = quality_rules()
+    orig_ids = [r.rule_id for r in first]
+    orig_violation = first[1].violation
+    first[1].violation = F.lit(True)
+    first[1].rule_id = "hijacked"
+    first[1].severity = "warning"
+    first.append(Rule("extra", "extra rule", F.lit(True)))
+    again = quality_rules()
+    assert [r.rule_id for r in again] == orig_ids
+    assert again[1].violation is orig_violation
+    assert again[1].severity == "fail"
+    # the mutated copy's flag follows its new violation, not the shared one
+    assert first[1].flag_col() is not again[1].flag_col()
+    assert again[1].flag_col() is quality_rules()[1].flag_col()
+
+
+def test_memo_not_grown_by_quality_table_runs(spark, sf_dir):
+    """QualityTable builds fresh Rules per session. run() keeps them out of
+    the memo entirely; annotate() memoizes by (rule_id, description,
+    severity), so repeating the same checks in new sessions adds nothing."""
+    from data_quality_spark import colmemo
+    from data_quality_spark.session import QualitySession
+
+    def session_run():
+        s = QualitySession(spark)
+        t = s.table_from_parquet(f"{sf_dir}/orders.parquet", "orders",
+                                 index_column="o_orderkey")
+        t.check_index_not_null()
+        t.check_columns_between_values(
+            "o_totalprice", min_value=0, max_value=300000)
+        before = colmemo.size()
+        t.run()
+        assert colmemo.size() == before
+        t.annotate()
+
+    session_run()
+    n = colmemo.size()
+    for _ in range(3):
+        session_run()
+    assert colmemo.size() == n
+
+
+def test_py4j_round_trip_budget(spark, fixture_path):
+    """A warm annotate_pages + metrics_by_partition build stays under 1,000
+    py4j gateway round trips (reflection lookups, calls and GC deletes
+    alike). Rebuilding the stage chain's Column trees per call costs ~6,000
+    — this guard fails if that comes back. Garbage left by earlier tests is
+    collected and its JVM deletes drained first, and cyclic GC is paused
+    while counting, so only the build's own traffic is counted."""
+    import gc
+    import time
+
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    n = [0]
+
+    def counting(*a, **kw):
+        n[0] += 1
+        return real(*a, **kw)
+
+    def build():
+        raw = spark.read.parquet(fixture_path).withColumn(
+            "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(8)))
+        ann = annotate_pages(raw.filter(F.col("bucket").isin(list(range(8)))))
+        metrics_by_partition(ann, group_cols=["bucket", "part_id"])
+
+    build()
+    build()
+    gc.collect()
+    pending = getattr(client, "finalizer_deque", ())
+    deadline = time.monotonic() + 30
+    while pending and time.monotonic() < deadline:
+        time.sleep(0.05)
+    gc.disable()
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        client.send_command = real
+        gc.enable()
+    assert n[0] <= 1000, f"{n[0]} py4j round trips for one warm build"
