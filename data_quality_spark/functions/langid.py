@@ -7,10 +7,11 @@ per-language seed vocabularies (public common-word lists in
 ``textstats.STOPWORDS`` extended below) — identical bytes on driver, executor
 and oracle, so scores match bit-for-bit.
 
-Engine path: vectorized pandas UDF (Series→Series), model built lazily once
-per executor process at module import — the "broadcast model" pattern from
-the north_star (module-level state ships with --py-files; no per-row Python
-UDF). Oracle path: the SAME ``predict_batch`` numpy function.
+Engine path: ``predict_batch`` inside the fused model UDF
+(functions/models.py), model built lazily once per executor process at
+module import — the "broadcast model" pattern from the north_star
+(module-level state ships with --py-files; no per-row Python UDF). Oracle
+path: the SAME ``predict_batch`` numpy function.
 
 Reference ancestor: ``ValuesInList`` on a lang column
 (/root/reference/data_quality/src/checks/values_in_list.py:24-33) — upgraded
@@ -136,25 +137,10 @@ def predict_one(text: str) -> tuple[str, float]:
 
 
 def predict_batch(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized batch path (shared by pandas UDF and oracle)."""
+    """Vectorized batch path (shared by the fused model UDF and oracle)."""
     langs, margins = [], []
     for t in texts.fillna(""):
         l, m = predict_one(t)
         langs.append(l)
         margins.append(m)
     return pd.DataFrame({"lang_pred": langs, "lang_margin": margins})
-
-
-def spark_udf():
-    """Series→Series pandas UDF returning struct(lang_pred, lang_margin).
-
-    Arrow-batched; profiles built once per executor interpreter (module
-    global), the SNIPPETS.md [1]/[3] pattern.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("lang_pred string, lang_margin double")
-    def langid_udf(texts: pd.Series) -> pd.DataFrame:
-        return predict_batch(texts)
-
-    return langid_udf

@@ -8,7 +8,8 @@ low perplexity; gibberish (random char runs) scores high — exactly the
 separation the quality filter needs.
 
 Same dual-path contract as langid: ``ppl_batch`` is shared verbatim by the
-pandas UDF (engine) and the oracle, so scores match bit-for-bit.
+fused model UDF (engine, functions/models.py) and the oracle, so scores
+match bit-for-bit.
 
 Plugs into the rule engine like a ColumnBetweenValues threshold
 (/root/reference/data_quality/src/checks/column_between_values.py:38-51).
@@ -94,13 +95,3 @@ def ppl_one(text: str, max_chars: int = 2000) -> float:
 
 def ppl_batch(texts: pd.Series) -> pd.Series:
     return texts.fillna("").map(ppl_one).astype("float64")
-
-
-def spark_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def ppl_udf(texts: pd.Series) -> pd.Series:
-        return ppl_batch(texts)
-
-    return ppl_udf

@@ -11,22 +11,19 @@ Patterns are written to the COMMON subset of Python ``re`` and Java
 are unicode-aware in Python), no inline flags, no lookbehind. This keeps the
 two engine paths equivalent:
 
-  * ``py_scrub``    — compiled-``re`` chain; used by the oracle AND by the
-                      Arrow-batched pandas UDF (bit-identical by construction)
+  * ``py_scrub``    — compiled-``re`` chain; the oracle
   * ``native_scrub``— ``F.regexp_replace`` chain (JVM hot path, no Python);
-                      pinned equal to ``py_scrub`` by tests on the full
-                      synthetic corpus (tests/test_scrub.py)
+                      pinned equal to ``py_scrub`` by tests on randomized
+                      and synthetic-corpus text (tests/test_properties.py)
 
-The default engine path is NATIVE (whole-stage codegen); the UDF exists for
-byte-parity verification and as fallback if a pattern ever needs Python-only
-features.
+The engine path is NATIVE (whole-stage codegen); ``py_scrub`` is its
+byte-parity reference.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -78,7 +75,7 @@ ALL_PATTERNS: list[tuple[str, str, str]] = SCRUB_PATTERNS + [
 _COMPILED = [(re.compile(p), repl) for _, p, repl in ALL_PATTERNS]
 
 
-# -- python path (oracle + parity UDF) ---------------------------------------
+# -- python path (oracle) ----------------------------------------------------
 
 
 def py_scrub(text: str | None) -> str | None:
@@ -89,28 +86,10 @@ def py_scrub(text: str | None) -> str | None:
     return text
 
 
-def py_scrub_batch(texts: pd.Series) -> pd.Series:
-    out = texts.copy()
-    mask = out.notna()
-    for rx, repl in _COMPILED:
-        out[mask] = out[mask].str.replace(rx, repl, regex=True)
-    return out
-
-
 def py_pii_found(text: str | None) -> bool:
     if not text:
         return False
     return any(rx.search(text) for rx, _ in _COMPILED)
-
-
-def spark_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def scrub_udf(texts: pd.Series) -> pd.Series:
-        return py_scrub_batch(texts)
-
-    return scrub_udf
 
 
 # -- native path (JVM regexp_replace chain — the hot path) -------------------

@@ -54,28 +54,12 @@ MAX_BUCKET = 1000
 
 
 # ---------------------------------------------------------------------------
-# shingling
+# tokenization
 # ---------------------------------------------------------------------------
 
 
 def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda x: x != "")
-
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams joined by single spaces (the MinHash item set)."""
-    toks = tokens_col(text)
-    k = F.size(toks)
-    starts = F.sequence(F.lit(1), k - (n - 1))  # 1-based, element_at is 1-based
-    grams = F.transform(
-        starts,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + F.lit(j)) for j in range(n)]
-        ),
-    )
-    return F.when(k >= n, F.array_distinct(grams)).otherwise(
-        F.expr("CAST(array() AS array<string>)")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -502,31 +486,11 @@ def remove_seen_paragraphs(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, k: int = MINHASH_K) -> Column:
-    """Array of k minhash values. Hash i = 60 bits of md5(shingle||'#⌊i/2⌋'),
-    taking hex digits [1,15] for even i and [16,30] for odd i — one md5 call
-    feeds two hash functions, so k hashes cost ⌈k/2⌉ md5 passes over the
-    shingle set. Empty shingle set → nulls (callers must filter)."""
-    def hash_with(salt: str, start: int):
-        # closure keeps the lambda unary — a binary lambda would make
-        # F.transform pass the array INDEX as the second argument
-        return lambda s: portable_hash64(s, salt, start)
-
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, hash_with(f"#{i // 2}", 1 + 15 * (i % 2)))
-            )
-            for i in range(k)
-        ]
-    )
-
-
-# -- python twins (bit-identical: same \s+ tokenization with ASCII classes
-#    like Java/RE2, same md5 hex-slice hashes) — the SCALE path. Catalyst
-#    higher-order functions are interpreted (CodegenFallback, no CSE), which
-#    makes the native signature expressions ~10× slower than a vectorized
-#    Arrow batch; values are identical either way, pinned by tests.
+# -- the shingling and hash functions the engine runs (same \s+
+#    tokenization with ASCII classes as Java/RE2, same md5 hex-slice hashes
+#    as the SQL oracles). Catalyst higher-order functions are interpreted
+#    (CodegenFallback, no CSE), so the equivalent native expressions are
+#    ~10× slower than a vectorized Arrow batch over these.
 
 _WS = re.compile(r"\s+", re.ASCII)
 _H64_MAX = (1 << 60) - 1
@@ -568,6 +532,9 @@ def _mh_vals(s: str, k: int) -> list[int]:
 
 
 def py_minhash(sh: list[str], k: int = MINHASH_K) -> list[int]:
+    """k minhash values. Hash i = 60 bits of md5(shingle||'#⌊i/2⌋'), taking
+    hex digits [1,15] for even i and [16,30] for odd i — one md5 call feeds
+    two hash functions, so k hashes cost ⌈k/2⌉ md5 passes per shingle."""
     mins = [_H64_MAX] * k
     for s in sh:
         v = _mh_vals(s, k)
@@ -627,21 +594,10 @@ def _simhash_udf(n: int, bits: int):
 
 
 def with_minhash(
-    df: DataFrame,
-    text_col: str,
-    n: int = 3,
-    k: int = MINHASH_K,
-    strategy: str = "udf",
+    df: DataFrame, text_col: str, n: int = 3, k: int = MINHASH_K
 ) -> DataFrame:
-    """strategy='udf' (default): Arrow-batched python signatures — the scale
-    path. strategy='native': pure Catalyst expressions — identical values
-    (tests pin equality), zero Python; use when python workers are
-    undesirable."""
-    if strategy == "native":
-        sh = word_shingles(F.col(text_col), n)
-        return df.withColumn("shingles", sh).withColumn(
-            "minhash", minhash_signature(F.col("shingles"), k)
-        )
+    """df + (shingles, minhash): py_shingles and py_minhash per row in one
+    Arrow-batched UDF. An empty shingle set gives a NULL minhash."""
     from data_quality_spark.ops.util import spread_narrow
 
     df = spread_narrow(df)

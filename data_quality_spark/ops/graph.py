@@ -86,8 +86,9 @@ def edges_from_pages(
     df: DataFrame, src_host_col: str, dst_host_col: str
 ) -> DataFrame:
     """Distinct host-pair edges from a page-level link table (drops self
-    loops). Run this BEFORE host_rank on real crawls: it collapses ~10^12
-    page links to ~10^9 host edges in one partial-aggregated distinct."""
+    loops, NULL and '' hosts). Run this BEFORE host_rank on real crawls: it
+    collapses ~10^12 page links to ~10^9 host edges in one
+    partial-aggregated distinct. hits() applies it to its input."""
     return (
         df.select(
             F.col(src_host_col).alias("src"), F.col(dst_host_col).alias("dst")
@@ -95,8 +96,12 @@ def edges_from_pages(
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         # host_of returns '' (not NULL) for malformed/relative urls —
         # a phantom '' node would receive rank and join every malformed
-        # url downstream, so empty hosts are dropped with the NULLs
-        .where((F.col("src") != "") & (F.col("dst") != ""))
+        # url downstream, so empty hosts are dropped with the NULLs (the
+        # string cast keeps non-string node ids from being cast to '' → NULL)
+        .where(
+            (F.col("src").cast("string") != "")
+            & (F.col("dst").cast("string") != "")
+        )
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -460,17 +465,18 @@ CC_MAX_ROUNDS = 50           # safety cap; converges in O(log n) rounds
 
 
 def _cc_checksum(e: DataFrame):
-    """(count, Σ hash64(a||sep||b)) — an order-independent bigint edge-set
+    """(count, XOR of hash64(a||sep||b)) — an order-independent edge-set
     fingerprint (one tiny 2-column agg per round) used as the convergence
-    test. 60-bit terms keep the sum far from bigint overflow below ~10^9
-    edges; beyond that compare counts first (done) so collisions of the
-    sum alone never mask a change."""
+    test. XOR never overflows, so it behaves the same with ANSI on or off
+    (a bigint sum of 60-bit terms can wrap once there are more than 8
+    edges). The edges are distinct, so no term cancels itself; counts are
+    compared too."""
     from data_quality_spark.ops.hashing import portable_hash64
 
     return e.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
-            F.sum(
+            F.bit_xor(
                 portable_hash64(
                     F.concat_ws("\x01", F.col("a"), F.col("b"))
                 )
@@ -499,7 +505,7 @@ def connected_components(
     pass; edges shuffle as bare (node, node) pairs, payloads never move.
     The edge set monotonically contracts to per-component stars rooted at
     the component minimum; convergence is detected by an order-independent
-    (count, Σ hash) fingerprint (one tiny agg per round) and each round is
+    (count, XOR hash) fingerprint (one tiny agg per round) and each round is
     localCheckpoint-ed so lineage depth stays O(1) instead of O(rounds).
 
     Node ids order by their natural type ordering (host strings: binary
@@ -1129,6 +1135,9 @@ def hits(
     so a lazy chain grows ~4^iters; the pin keeps every job shallow and
     runtime linear in iters, the GraphX-style iterative materialization).
 
+    The input goes through edges_from_pages first: self-loops, NULL and
+    '' hosts never become nodes, and duplicate edges count once.
+
     Returns (host, auth_units, hub_units, auth double, hub double).
     """
     # pin the edge and node frames ONCE: every iteration references e twice
@@ -1139,11 +1148,7 @@ def hits(
     # frames are bare (host, host) / (host) rows — the standard iterative-
     # graph materialization (GraphX does the same), executor-storage-sized
     # by the HOST graph, not the corpus.
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = edges_from_pages(edges, src_col, dst_col).localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("host"))
         .unionByName(e.select(F.col("dst").alias("host")))
@@ -1238,7 +1243,11 @@ def sql_hits(edges_sql: str, iters: int = HITS_ITERS) -> str:
     with localCheckpoint).
     edges_sql must yield (src, dst) with the same rows as the Spark side."""
     ctes = [
-        f"e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_sql}))",
+        # the edges_from_pages filter hits() applies to its input
+        f"e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_sql})"
+        " WHERE src IS NOT NULL AND dst IS NOT NULL"
+        " AND CAST(src AS VARCHAR) <> '' AND CAST(dst AS VARCHAR) <> ''"
+        " AND src <> dst)",
         "nodes AS MATERIALIZED"
         " (SELECT src AS host FROM e UNION SELECT dst FROM e)",
         f"h0 AS MATERIALIZED"

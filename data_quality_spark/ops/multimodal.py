@@ -366,37 +366,13 @@ def sample_frames(
     df: DataFrame,
     frame_chars: int = FRAME_CHARS,
     every_n: int = 2,
-    strategy: str = "udf",
 ) -> DataFrame:
     """Frame-sampling plumbing: ONE media row → N sampled frame rows
     (media_id, frame_idx, n_chars, frame_md5) — every `every_n`-th
     fixed-size window of the decoded payload. This is the 1→N mapInPandas
     contract a real video frame extractor uses (payload → decoded frames →
     per-frame rows); the codec is the stub (windows of the decoded text
-    stand in for decoded frames — the sandbox ships no video libs).
-
-    strategy='udf' (default): Arrow mapInPandas — the production shape.
-    strategy='native': pure Catalyst sequence+explode twin (pinned equal)."""
-    if strategy == "native":
-        s = F.decode(F.col("payload"), "UTF-8")
-        n_frames = F.ceil(F.length(s) / F.lit(frame_chars)).cast("int")
-        idxs = F.when(
-            F.length(s) > 0,
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n)),
-        ).otherwise(F.expr("CAST(array() AS array<int>)"))
-        ex = df.select(
-            "media_id", s.alias("__s"), F.explode(idxs).alias("frame_idx")
-        )
-        frame = F.substring(
-            F.col("__s"), F.col("frame_idx") * frame_chars + 1, frame_chars
-        )
-        return ex.select(
-            "media_id",
-            "frame_idx",
-            F.length(frame).alias("n_chars"),
-            F.md5(frame).alias("frame_md5"),
-        )
-
+    stand in for decoded frames — no video codec is bundled)."""
     out_schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -424,68 +400,3 @@ def sample_frames(
             )
 
     return df.mapInPandas(batches, out_schema)
-
-
-def resize_media(
-    df: DataFrame, target_w: int, target_h: int, strategy: str = "udf"
-) -> DataFrame:
-    """Resize plumbing: payload → (media_id, payload, width, height, format)
-    with the payload "resampled" to the target size. The resample is the
-    stub (deterministic truncate-to-budget of the decoded payload, budget =
-    w·h/16 chars — a real implementation decodes, resizes with
-    Pillow/ffmpeg, re-encodes inside the same batch loop); the schema,
-    batching, and map-only plan shape are the production contract."""
-    budget = max(1, (target_w * target_h) // 16)
-    if strategy == "native":
-        s = F.decode(F.col("payload"), "UTF-8")
-        return df.select(
-            "media_id",
-            F.encode(F.substring(s, 1, budget), "UTF-8").alias("payload"),
-            F.lit(target_w).alias("width"),
-            F.lit(target_h).alias("height"),
-            "format",
-        )
-
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("format", StringType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for p in pdf["payload"]:
-                if p is None:
-                    out.append(None)  # NULL in → NULL out, like the native twin
-                else:
-                    s = bytes(p).decode("utf-8")
-                    out.append(s[:budget].encode("utf-8"))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": out,
-                    "width": target_w,
-                    "height": target_h,
-                    "format": pdf["format"],
-                }
-            )
-
-    return df.mapInPandas(batches, out_schema)
-
-
-def media_meta_native(df: DataFrame) -> DataFrame:
-    """Native-expression twin of decode_media_meta minus the stub decode:
-    byte length + md5 digest via JVM functions (no Python at all). Used as
-    the oracle-checkable projection and the fast path when only
-    size/digest metadata is needed."""
-    return df.select(
-        F.col("media_id"),
-        F.octet_length(F.col("payload")).cast("long").alias("n_bytes"),
-        F.md5(F.col("payload")).alias("digest_md5"),
-        F.col("format"),
-    )

@@ -130,10 +130,9 @@ def _pair_dot_udf():
                 vals.append(None)
                 continue
             if len(u) != len(v):
-                # mirror the native zip_with path: the shorter side pads
-                # with NULL → dot NULL → pair filtered; a silent zip()
-                # truncation here would emit a number the native strategy
-                # rejects, diverging the two pair sets on ragged input
+                # as the `dot` fold's zip_with: the shorter side pads with
+                # NULL → dot NULL → pair filtered; a silent zip()
+                # truncation here would emit a number the fold rejects
                 vals.append(None)
                 continue
             acc = 0.0
@@ -151,22 +150,17 @@ def cosine_pairs(
     vec_col: str,
     block_cols: list[str],
     threshold: float,
-    strategy: str = "udf",
 ) -> DataFrame:
     """All pairs within a block with cosine ≥ threshold (id_a < id_b).
 
     Norms are computed ONCE per input row before the self-join (N folds,
-    not Σ|block|² per-pair recomputations). The per-pair dot product runs
-    'udf' (Arrow, scale path — bit-parity argument at _pair_dot_udf) or
-    'native' (pure Catalyst fold, zero Python); values identical
-    (test-pinned)."""
+    not Σ|block|² per-pair recomputations). The per-pair dot product is an
+    Arrow UDF, bit-identical to the `dot` fold (argument at
+    _pair_dot_udf)."""
     v = _as_double(F.col(vec_col))
     base = df.select(id_col, *block_cols, v.alias("v"), norm(v).alias("nv"))
     l, r = base.alias("l"), base.alias("r")
-    if strategy == "native":
-        dot_col = dot(F.col("l.v"), F.col("r.v"))
-    else:
-        dot_col = _pair_dot_udf()(F.col("l.v"), F.col("r.v"))
+    dot_col = _pair_dot_udf()(F.col("l.v"), F.col("r.v"))
     na, nb = F.col("l.nv"), F.col("r.nv")
     cos_col = F.when((na > 0) & (nb > 0), dot_col / (na * nb)).otherwise(
         F.lit(0.0)
@@ -473,12 +467,9 @@ def _assign_rows(V: np.ndarray, C: np.ndarray) -> list:
     return out
 
 
-def assign_cells(vec: Column, centroids: list[list[float]],
-                 strategy: str = "udf") -> Column:
-    """Cell-assignment column: 'udf' (Arrow matmul, scale path) or 'native'
-    (pure Catalyst fold — zero Python). Values identical (pinned by test)."""
-    if strategy == "native":
-        return _assign_cell_expr(vec, centroids)
+def assign_cells(vec: Column, centroids: list[list[float]]) -> Column:
+    """Cell-assignment column: an Arrow matmul per batch, with the same
+    values as the `_assign_cell_expr` fold."""
     return _assign_cells_udf(centroids)(vec)
 
 
@@ -489,12 +480,11 @@ def train_kmeans_cells(
     k: int = 8,
     n_iter: int = 3,
     dim: int = EMB_DIM,
-    strategy: str = "udf",
 ) -> list[list[float]]:
     """Deterministic Lloyd's k-means over the embedding column — the TRAINED
     coarse quantizer for IVF search (replaces using a label column as
     cells). Init = the vectors of the k smallest ids (no RNG); each
-    iteration assigns by an in-plan cosine-argmax expression (one scan) and
+    iteration assigns by the cosine-argmax UDF of assign_cells (one scan) and
     recomputes means as 64 codegen'd avg aggregates rounded to 6dp (pins
     partial-sum combine order, the same trick label_centroids uses). Only
     the k×dim centroid table ever reaches the driver. At 10^12 vectors,
@@ -516,13 +506,12 @@ def train_kmeans_cells(
     if len(seeds) < k:
         raise ValueError(f"need >= {k} non-NULL vectors to seed {k} cells")
     cents = [[float(x) for x in r["__v"]] for r in seeds]
-    if strategy == "udf":
-        from data_quality_spark.ops.util import spread_narrow
+    from data_quality_spark.ops.util import spread_narrow
 
-        df = spread_narrow(df)
+    df = spread_narrow(df)
     for _ in range(n_iter):
         assigned = df.select(
-            assign_cells(v, cents, strategy).alias("__cell"), v.alias("__v")
+            assign_cells(v, cents).alias("__cell"), v.alias("__v")
         )
         aggs = [
             F.round(F.avg(F.element_at(F.col("__v"), i + 1)), 6).alias(f"c{i}")
@@ -669,7 +658,6 @@ def cosine_lsh_pairs(
     vec_col: str,
     threshold: float = 0.95,
     tables: list[list[list[float]]] | None = None,
-    strategy: str = "udf",
     broadcast_candidates: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by random-hyperplane LSH — the no-blocking-key
@@ -687,19 +675,10 @@ def cosine_lsh_pairs(
 
     tables = tables if tables is not None else PAIR_HYPERPLANES
     v = _as_double(F.col(vec_col))
-    if strategy == "udf":
-        from data_quality_spark.ops.util import spread_narrow
+    from data_quality_spark.ops.util import spread_narrow
 
-        df = spread_narrow(df)
-        keys = _pair_band_keys_udf(tables)(v)
-    else:  # 'native': pure Catalyst fold expressions, zero Python
-        keys = F.array(
-            *[
-                F.lit(t << 32).cast("long")
-                + lsh_signature(v, planes).cast("long")
-                for t, planes in enumerate(tables)
-            ]
-        )
+    df = spread_narrow(df)
+    keys = _pair_band_keys_udf(tables)(v)
     banded = df.select(
         F.col(id_col).alias("doc_id"), F.explode(keys).alias("band_key")
     )
@@ -1383,6 +1362,8 @@ def sql_embedding_decontaminate(
     """DuckDB twin of embedding_decontaminate: brute-force cross join +
     per-eval max, same raw-double cosine (list_sum over dim order), same
     lexicographic (cos, train_id) tie rule, same rounded-edge threshold.
+    Train rows whose length differs from the eval vector's are skipped, as
+    the Spark side skips rows of the wrong dim.
     train_sql/eval_sql must yield (id BIGINT, v DOUBLE[])."""
     cos = (
         "CASE WHEN sqrt(list_sum([t.v[i]*t.v[i] for i in range(1, len(t.v)+1)])) > 0"
@@ -1397,7 +1378,7 @@ WITH train AS MATERIALIZED ({train_sql}),
 ev AS MATERIALIZED ({eval_sql}),
 pairs AS MATERIALIZED (
   SELECT e.id AS eval_id, t.id AS train_id, {cos} AS c
-  FROM train t, ev e WHERE t.v IS NOT NULL),
+  FROM train t, ev e WHERE t.v IS NOT NULL AND len(t.v) = len(e.v)),
 mx AS (SELECT eval_id, max(c) AS mc FROM pairs GROUP BY 1)
 SELECT p.eval_id, max(p.train_id) AS best_train_id,
        round(any_value(mx.mc), 6) AS max_cos,

@@ -528,28 +528,12 @@ def decontaminate(
 # ---------------------------------------------------------------------------
 
 
-def fingerprint(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, strategy: str = "udf"
-) -> DataFrame:
+def fingerprint(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, fp_min, fp_max, n_shingles): min/max 60-bit hash over word
     n-gram shingles — the two winnowing anchors. Equal fp_min across docs ⇒
     shared rare shingle ⇒ near-dup candidate (cheap pre-cluster key).
-
-    strategy='udf' (default): Arrow-batched hashlib path — identical values,
-    ~10× faster than the interpreted higher-order-function expressions.
-    strategy='native': pure Catalyst, zero Python."""
-    if strategy == "native":
-        from data_quality_spark.ops.dedup import word_shingles
-
-        sh = word_shingles(F.col(text_col), n)
-        hs = F.transform(sh, lambda s: portable_hash64(s))
-        return df.select(
-            F.col(id_col),
-            F.array_min(hs).alias("fp_min"),
-            F.array_max(hs).alias("fp_max"),
-            F.size(sh).alias("n_shingles"),
-        ).where(F.col("n_shingles") > 0)
-
+    Arrow-batched hashlib path (py_shingles + py_hash64): ~10× faster than
+    the same hashes as interpreted higher-order-function expressions."""
     from pyspark.sql.functions import pandas_udf
 
     from data_quality_spark.ops.dedup import py_shingles
@@ -579,11 +563,11 @@ def fingerprint(
 # corpus-level boilerplate line removal (CCNet / RefinedWeb-style)
 # ---------------------------------------------------------------------------
 
-# Hard cap on the boilerplate-line set collected to the driver for the
-# map-only rewrite pass. By construction each boilerplate line accounts for
+# Cap on the boilerplate-line set collected to the driver for the map-only
+# rewrite pass. By construction each boilerplate line accounts for
 # >= min_docs documents, so |set| <= total_lines / min_docs — small for any
-# sane threshold; the cap turns a pathological corpus into a loud error
-# (with the shuffle-join strategy as the escape hatch) instead of driver OOM.
+# sane threshold; a pathological corpus over the cap takes the shuffle-join
+# rewrite instead of risking driver OOM.
 BOILER_MAX_BROADCAST = 200_000
 
 
@@ -640,7 +624,6 @@ def remove_boilerplate(
     min_docs: int,
     out_col: str = "text_clean",
     min_line_chars: int = 1,
-    strategy: str = "broadcast",
     max_broadcast: int = BOILER_MAX_BROADCAST,
 ) -> DataFrame:
     """Strip corpus-level boilerplate lines (see boilerplate_lines) from
@@ -648,17 +631,17 @@ def remove_boilerplate(
     lines in original order. NULL text -> NULL; a doc whose every line is
     boilerplate -> ''.
 
-    strategy='broadcast' (default): the detected line set is collected
-    (hard-capped at max_broadcast, loud error beyond) and shipped once per
-    executor; the rewrite is a map-only Arrow UDF with O(1) set membership
-    per line — the full corpus never shuffles.
-    strategy='join': no driver collection — posexplode + broadcast anti-join
-    against the detected set + ordered re-assembly, then an id-keyed join
-    back. Costs one full-corpus shuffle (the re-group) — the escape hatch
-    for a boilerplate set too large to broadcast."""
+    The detected line set is collected up to max_broadcast + 1 lines. When
+    it fits the cap it is shipped once per executor and the rewrite is a
+    map-only Arrow UDF with O(1) set membership per line — the full corpus
+    never shuffles. Over the cap, the rewrite runs without a driver
+    collection: posexplode + anti-join against the detected set + ordered
+    re-assembly, then an id-keyed join back, at the cost of one full-corpus
+    shuffle (the re-group). Both paths give the same output."""
     bl = boilerplate_lines(df, text_col, min_docs, min_line_chars)
+    rows = bl.select("line").limit(max_broadcast + 1).collect()
 
-    if strategy == "join":
+    if len(rows) > max_broadcast:
         lines = (
             df.where(F.col(text_col).isNotNull())
             .select(
@@ -667,11 +650,9 @@ def remove_boilerplate(
                     "__pos", "__line"
                 ),
             )
-            .join(
-                F.broadcast(bl.select(F.col("line").alias("__line"))),
-                "__line",
-                "left_anti",
-            )
+            # no broadcast hint: this set is over the cap by construction,
+            # so AQE picks the join from its measured size
+            .join(bl.select(F.col("line").alias("__line")), "__line", "left_anti")
         )
         rebuilt = lines.groupBy(id_col).agg(
             F.array_join(
@@ -689,15 +670,6 @@ def remove_boilerplate(
             ),
         )
 
-    if strategy != "broadcast":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    rows = bl.select("line").limit(max_broadcast + 1).collect()
-    if len(rows) > max_broadcast:
-        raise ValueError(
-            f"boilerplate set exceeds max_broadcast={max_broadcast}; "
-            "use strategy='join' or raise min_docs"
-        )
     blset = frozenset(r["line"] for r in rows)
     b = df.sparkSession.sparkContext.broadcast(blset)
 

@@ -12,7 +12,7 @@ five standard entities the generator can emit are unescaped (&lt; &gt;
 Tag names are matched exactly (``<p(?:\\s[^>]*)?>`` — ``<pre>`` is NOT a
 paragraph), which is stricter than a bare ``<p[^>]*>``.
 
-  * ``py_extract``     — pure-Python (oracle; also the parity pandas UDF)
+  * ``py_extract``     — pure-Python (the oracle and the test reference)
   * ``with_extracted`` — the ENGINE hot path: a staged two-projection JVM
     Column chain (below), whole-stage codegen, no Python.
   * ``native_extract`` — single-Column convenience form of the same
@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -82,20 +81,6 @@ def py_extract(html_bytes: bytes | None) -> str | None:
     if m is None:
         return None
     return "\n".join(py_unescape(p) for p in _PARA.findall(m.group(1)))
-
-
-def py_extract_batch(htmls: pd.Series) -> pd.Series:
-    return htmls.map(py_extract)
-
-
-def spark_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def extract_udf(htmls: pd.Series) -> pd.Series:
-        return py_extract_batch(htmls)
-
-    return extract_udf
 
 
 def _extract_from_m0(html_col: Column, m0: Column) -> Column:

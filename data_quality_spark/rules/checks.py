@@ -162,30 +162,19 @@ def not_empty_column(col: str, **kw) -> Rule:
 
 # ---------------------------------------------------------------------------
 # #2 — duplicate values (values_duplicate.py): row is KO if its (string-cast)
-#      value occurs >1× among non-null rows. Window count over a hash
-#      shuffle on the value — Spark's WindowExec replaces the reference's
-#      `count(*) OVER (PARTITION BY cast(col as string))` (:54) verbatim
-#      but partition-parallel.
+#      value occurs >1× among non-null rows — the reference's
+#      `count(*) OVER (PARTITION BY cast(col as string))` (:54) as an
+#      aggregate over the value column joined back to the frame.
 # ---------------------------------------------------------------------------
 
 
-def duplicate_values(col: str, strategy: str = "agg_join", **kw) -> Rule:
-    """strategy='agg_join' (default — the scale path) shuffles only the value
-    column (groupBy count>1 → small dup-key set) and joins it back; AQE picks
-    broadcast when the dup set is small, so the wide frame never moves.
-    strategy='window' shuffles the FULL frame on the value — acceptable on
-    slim tables, wrong at 100 TB (the shuffle carries every column, html
-    included). Same KO set either way."""
+def duplicate_values(col: str, **kw) -> Rule:
+    """Shuffles only the value column (groupBy count>1 → small dup-key set)
+    and joins it back; AQE picks broadcast when the dup set is small, so
+    the wide frame never moves. A window count partitioned on the value
+    gives the same KO set but shuffles the FULL frame (html included)."""
     rule_id = kw.pop("rule_id", f"duplicate__{col}")
     description = kw.pop("description", "Duplicated index")
-    if strategy == "window":
-        w = Window.partitionBy(F.col(col).cast("string"))
-        return Rule(
-            rule_id=rule_id,
-            description=description,
-            violation=not_empty(col) & (F.count(F.lit(1)).over(w) > 1),
-            **kw,
-        )
     aux = f"__aux_dup__{rule_id}"
 
     def prepare(df: DataFrame) -> DataFrame:
@@ -413,14 +402,9 @@ def match_dimension(
     fk_cols: list[str] | str,
     pk_cols: list[str] | str | None = None,
     broadcast_dim: bool = True,
-    strategy: str = "join",
     **kw,
 ) -> Rule:
-    """strategy='join' (default): broadcast left join, scale path.
-    strategy='isin': collect the dim's distinct composite keys and inline a
-    literal NOT-IN — the reference's tiny-dim plan (its SQL fact × pandas
-    dim combo builds exactly this list, match_dimension_table.py:68-89).
-    Join-free: use when the dim is a handful of values.
+    """Left join of the fact on the dim's distinct composite keys.
 
     broadcast_dim=True forces the dim as the hash-join build side —
     correct for the reference's lookup-table dims and for any dim that
@@ -433,34 +417,6 @@ def match_dimension(
         [pk_cols] if isinstance(pk_cols, str) else list(pk_cols)
     )
     rule_id = kw.pop("rule_id", "match_dimension__" + "_".join(fk_cols))
-    if strategy == "isin":
-        keys = [
-            r["__k"]
-            for r in dim_df.select(
-                composite_key(pk_cols, dim_df.schema).alias("__k")
-            )
-            .where(F.col("__k").isNotNull())
-            .distinct()
-            .collect()
-        ]
-        # fact-side key built in prepare (schema known there → type-gated
-        # normalization); __aux_* columns are dropped after the flag
-        # projection by the engine
-        aux = f"__aux_mdkey_{rule_id}"
-
-        def prepare_isin(df: DataFrame) -> DataFrame:
-            return df.withColumn(aux, composite_key(fk_cols, df.schema))
-
-        return Rule(
-            rule_id=rule_id,
-            description=kw.pop(
-                "description", f"Value in columns {fk_cols} not in dimension table"
-            ),
-            violation=conjoin([not_empty(c) for c in fk_cols])
-            & ~F.col(aux).isin(keys),
-            prepare=prepare_isin,
-            **kw,
-        )
     # __aux_ prefix: RuleEngine.flags/annotate drop internal columns
     # by that convention — the old __dim_hit_ name leaked into the
     # public annotated frame

@@ -19,3 +19,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+@pytest.fixture
+def ansi_on(spark):
+    """The shared session with spark.sql.ansi.enabled=true for one test
+    (get_spark turns ANSI off); the prior value is restored afterwards."""
+    key = "spark.sql.ansi.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        yield spark
+    finally:
+        spark.conf.set(key, prior)

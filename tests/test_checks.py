@@ -418,31 +418,6 @@ def test_ignore_filters(spark, sf_dir):
     assert 0 < r_filt.n_ko < r_all.n_ko
 
 
-def test_match_dimension_isin_strategy(spark, sf_dir):
-    """Tiny-dim literal NOT-IN plan (match_dimension_table.py:68-89) must
-    produce the same KO set as the broadcast join plan."""
-    from data_quality_spark.rules import checks as C
-    from data_quality_spark.rules.core import RuleEngine
-    from pyspark.sql import functions as F
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    dim = spark.read.parquet(f"{sf_dir}/nation.parquet").where(
-        F.col("n_regionkey") < 4)
-
-    def ko_ids(rule):
-        eng = RuleEngine([rule])
-        return sorted(
-            r["c_custkey"]
-            for r in eng.flags(cust).where(F.col(f"__ko_{rule.rule_id}"))
-            .select("c_custkey").collect()
-        )
-
-    join_ids = ko_ids(C.match_dimension(dim, "c_nationkey", "n_nationkey"))
-    isin_ids = ko_ids(C.match_dimension(dim, "c_nationkey", "n_nationkey",
-                                        strategy="isin"))
-    assert join_ids == isin_ids and len(join_ids) > 0
-
-
 def test_norm_key_type_gate_is_noop(spark):
     """The round-3 dtype gate (integral/boolean/date → plain cast) must be
     value-identical to the full normalization chain on those types, and the

@@ -34,21 +34,18 @@ def test_portable_hash_matches_python(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_word_shingles(spark):
-    df = spark.createDataFrame(
-        [("a b c d",), ("a b",), ("",), ("x  y \t z",)], "text string"
-    )
-    out = [r["sh"] for r in df.select(
-        D.word_shingles(F.col("text")).alias("sh")).collect()]
+def test_word_shingles():
+    """py_shingles is the shingler every MinHash/SimHash/fingerprint UDF
+    runs."""
+    out = [D.py_shingles(t) for t in ["a b c d", "a b", "", "x  y \t z"]]
     assert out[0] == ["a b c", "b c d"]
     assert out[1] == []  # fewer than n words
     assert out[2] == []
     assert out[3] == ["x y z"]  # whitespace runs collapse
 
 
-def test_word_shingles_distinct(spark):
-    df = spark.createDataFrame([("a b a b a b a",)], "text string")
-    out = df.select(D.word_shingles(F.col("text")).alias("sh")).collect()[0]["sh"]
+def test_word_shingles_distinct():
+    out = D.py_shingles("a b a b a b a")
     assert sorted(out) == ["a b a", "b a b"]
 
 
@@ -511,21 +508,24 @@ def test_gif_webp_header_parsers():
 
 
 def test_media_meta_native_agrees_with_pandas_path(spark):
+    """decode_media_meta's digest and size equal hashlib.md5 / len of the
+    collected payloads."""
     docs = spark.createDataFrame(
         [(i, f"text number {i}") for i in range(20)], "doc_id long, text string"
     )
     media = M.synthesize_media(docs, "doc_id", "text")
-    native = {r["media_id"]: r for r in M.media_meta_native(media).collect()}
+    payloads = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
     pandas_path = {r["media_id"]: r for r in M.decode_media_meta(media).collect()}
-    assert set(native) == set(pandas_path)
-    for k in native:
-        assert native[k]["digest_md5"] == pandas_path[k]["digest_md5"]
-        assert native[k]["n_bytes"] == pandas_path[k]["n_bytes"]
+    assert set(payloads) == set(pandas_path) and len(payloads) == 20
+    for k, b in payloads.items():
+        assert pandas_path[k]["digest_md5"] == hashlib.md5(b).hexdigest()
+        assert pandas_path[k]["n_bytes"] == len(b)
 
 
 def test_sample_frames_udf_matches_native(spark):
-    """1→N frame sampling: Arrow mapInPandas path == Catalyst
-    sequence+explode twin, including empty and multi-frame payloads."""
+    """1→N frame sampling: the Arrow mapInPandas path equals frames cut
+    and hashed in plain python from the collected payloads, including
+    empty and multi-frame payloads."""
     docs = spark.createDataFrame(
         [(1, "x" * 700), (2, "short"), (3, "y" * 256), (4, None)],
         "doc_id long, text string",
@@ -534,29 +534,19 @@ def test_sample_frames_udf_matches_native(spark):
     udf = sorted(
         map(tuple, M.sample_frames(media, every_n=2).collect())
     )
-    native = sorted(
-        map(tuple, M.sample_frames(media, every_n=2, strategy="native").collect())
-    )
-    assert udf == native and len(udf) > 0
+    fc = M.FRAME_CHARS
+    expected = []
+    for r in media.collect():
+        s = bytes(r["payload"]).decode("utf-8")
+        for i in range(0, -(-len(s) // fc), 2):
+            fr = s[i * fc:(i + 1) * fc]
+            expected.append((r["media_id"], i, len(fr),
+                             hashlib.md5(fr.encode("utf-8")).hexdigest()))
+    assert udf == sorted(expected) and len(udf) > 0
     # 700 chars → frames 0,1,2 → sampled 0,2; frame 2 has 700-512=188 chars
     by_doc = [(r for r in udf if r[0] == 1)]
     f1 = [r for r in udf if r[0] == 1]
     assert [(r[1], r[2]) for r in f1] == [(0, 256), (2, 188)]
-
-
-def test_resize_media_udf_matches_native(spark):
-    docs = spark.createDataFrame(
-        [(1, "z" * 500), (2, "tiny")], "doc_id long, text string"
-    )
-    media = M.synthesize_media(docs, "doc_id", "text")
-    udf = {r["media_id"]: r for r in M.resize_media(media, 32, 32).collect()}
-    nat = {r["media_id"]: r
-           for r in M.resize_media(media, 32, 32, strategy="native").collect()}
-    assert set(udf) == set(nat)
-    for k in udf:
-        assert bytes(udf[k]["payload"]) == bytes(nat[k]["payload"])
-        assert udf[k]["width"] == 32 and udf[k]["height"] == 32
-    assert len(bytes(udf[1]["payload"])) == (32 * 32) // 16  # budget-capped
 
 
 # ---------------------------------------------------------------------------
@@ -718,8 +708,9 @@ def test_ivf_topk_probes_nearest_cell(spark):
 
 
 def test_assign_cells_udf_matches_native_expr(spark, sf_dir):
-    """The Arrow assignment UDF and the Catalyst fold expression must agree
-    on every vector (same rounded cosines, same tie resolution)."""
+    """The Arrow assignment UDF and the Catalyst fold expression
+    (_assign_cell_expr) must agree on every vector (same rounded cosines,
+    same tie resolution)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -727,13 +718,13 @@ def test_assign_cells_udf_matches_native_expr(spark, sf_dir):
     native = {
         r["vec_id"]: r["c"]
         for r in emb.select(
-            "vec_id", S.assign_cells(F.col("v"), cents, "native").alias("c")
+            "vec_id", S._assign_cell_expr(F.col("v"), cents).alias("c")
         ).collect()
     }
     udf = {
         r["vec_id"]: r["c"]
         for r in emb.select(
-            "vec_id", S.assign_cells(F.col("v"), cents, "udf").alias("c")
+            "vec_id", S.assign_cells(F.col("v"), cents).alias("c")
         ).collect()
     }
     assert len(native) > 0 and native == udf
@@ -1430,18 +1421,25 @@ def test_remove_boilerplate_both_strategies(spark):
         4: "",
         5: None,
     }
-    for strategy in ("broadcast", "join"):
+    # max_broadcast=0: the detected set is always over the cap, so the
+    # shuffle-join rewrite runs instead of the broadcast UDF
+    for cap in (T.BOILER_MAX_BROADCAST, 0):
         got = {r["i"]: r["text_clean"] for r in T.remove_boilerplate(
-            df, "i", "t", 3, strategy=strategy).collect()}
-        assert got == expected, strategy
+            df, "i", "t", 3, max_broadcast=cap).collect()}
+        assert got == expected, cap
 
 
 def test_remove_boilerplate_broadcast_cap(spark):
-    # every line is shared by both docs -> 2 boilerplate lines > cap of 1
+    # every line is shared by both docs -> 2 boilerplate lines > cap of 1:
+    # the over-cap set takes the join rewrite and gives the default output
     df = spark.createDataFrame(
-        [(1, "x\ny"), (2, "x\ny")], "i int, t string")
-    with pytest.raises(ValueError, match="max_broadcast"):
-        T.remove_boilerplate(df, "i", "t", 2, max_broadcast=1)
+        [(1, "x\ny\nz"), (2, "x\ny"), (3, None)], "i int, t string")
+    default = {r["i"]: r["text_clean"]
+               for r in T.remove_boilerplate(df, "i", "t", 2).collect()}
+    capped = {r["i"]: r["text_clean"] for r in T.remove_boilerplate(
+        df, "i", "t", 2, max_broadcast=1).collect()}
+    assert default == {1: "z", 2: "", 3: None}
+    assert capped == default
 
 
 def test_dup_span_stats(spark):
@@ -1756,6 +1754,8 @@ def test_dsir_weights_shift_toward_target(spark):
 
 
 def test_cosine_pairs_udf_matches_native(spark):
+    """The Arrow per-pair dot in cosine_pairs equals the Catalyst fold
+    (S.cosine over S.dot/S.norm) on every pair, NULL vector included."""
     import random
 
     rng = random.Random(7)
@@ -1763,8 +1763,17 @@ def test_cosine_pairs_udf_matches_native(spark):
         (i, i % 3, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(40)
     ] + [(100, 0, None)]
     df = spark.createDataFrame(rows, "vec_id int, blk int, v array<double>")
-    a = S.cosine_pairs(df, "vec_id", "v", ["blk"], -1.0, strategy="udf")
-    b = S.cosine_pairs(df, "vec_id", "v", ["blk"], -1.0, strategy="native")
+    a = S.cosine_pairs(df, "vec_id", "v", ["blk"], -1.0)
+    l, r = df.alias("l"), df.alias("r")
+    b = (
+        l.join(r, "blk")
+        .where(F.col("l.vec_id") < F.col("r.vec_id"))
+        .select(
+            F.col("l.vec_id").alias("id_a"),
+            F.col("r.vec_id").alias("id_b"),
+            F.round(S.cosine(F.col("l.v"), F.col("r.v")), 6).alias("cos_sim"),
+        )
+    )
     ra = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in a.collect()}
     rb = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in b.collect()}
     assert ra == rb and len(ra) > 100
@@ -2898,6 +2907,29 @@ def test_connected_components_long_path_converges(spark):
     assert all(r["component_size"] == n for r in rows)
 
 
+def test_connected_components_ansi_on(spark, ansi_on):
+    """The convergence fingerprint must not overflow under ANSI: a 40-edge
+    chain gives the same single component with ANSI on as with it off."""
+    from data_quality_spark.ops import graph as G
+
+    n = 41
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n - 1)],
+        "src string, dst string",
+    )
+
+    def components():
+        return sorted(
+            (r["host"], r["component"], r["component_size"])
+            for r in G.connected_components(edges).collect()
+        )
+
+    on = components()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    off = components()
+    assert on == off == [(f"n{i:02d}", "n00", n) for i in range(n)]
+
+
 def test_harmonic_exact_known_distances(spark):
     """Directed diamond a→b→c→d plus a→d: incoming-path convention, exact
     integer micro-units, radius bound honored."""
@@ -3240,6 +3272,41 @@ def test_hits_checkpoint_parity_and_guards(spark):
         G.HITS_MAX_DEG = orig
 
 
+def test_hits_drops_self_loops_and_empty_hosts(spark):
+    """hits() filters its input like edges_from_pages: a self-loop, ''
+    hosts and NULL hosts change nothing, on the Spark side and in the
+    sql_hits DuckDB twin alike."""
+    import duckdb
+
+    from data_quality_spark.ops import graph as G
+
+    clean = [(f"s{i}.example", f"t{(i * 3 + j) % 4}.example")
+             for i in range(5) for j in range(2)]
+    dirty = clean + [("s0.example", "s0.example"), ("", "t1.example"),
+                     ("s2.example", ""), (None, "t0.example")]
+
+    def spark_hits(edges):
+        df = spark.createDataFrame(edges, "src string, dst string")
+        return {r[0]: tuple(r[1:]) for r in G.hits(df, iters=4).collect()}
+
+    def sql_hits(edges):
+        vals = ", ".join(
+            "(" + ", ".join("NULL" if h is None else f"'{h}'" for h in e) + ")"
+            for e in edges
+        )
+        sql = G.sql_hits(f"SELECT * FROM (VALUES {vals}) t(src, dst)", iters=4)
+        return {r[0]: tuple(r[1:]) for r in duckdb.connect().execute(sql).fetchall()}
+
+    want = spark_hits(clean)
+    assert len(want) == 9
+    assert spark_hits(dirty) == want
+    assert sql_hits(dirty) == sql_hits(clean) == want
+    # integer node ids are not compared with '' as integers (which would
+    # cast '' to NULL and drop every edge)
+    ints = spark.createDataFrame([(1, 2), (2, 3), (3, 3)], "src long, dst long")
+    assert sorted(r["host"] for r in G.hits(ints).collect()) == [1, 2, 3]
+
+
 def test_degree_stats(spark):
     """Distinct-edge contract (duplicate edges count once), zero-fill for
     one-sided hosts, and the dangling host shows out_deg = 0."""
@@ -3379,6 +3446,32 @@ def test_embedding_decontaminate_guards(spark):
             S.embedding_decontaminate(train, big)
     finally:
         S.DECON_EVAL_MAX = orig
+
+
+def test_embedding_decontaminate_ragged_train_row(spark):
+    """A train vector shorter than the eval vectors is skipped by both
+    engines. Scored over its own length it would be an exact match, so
+    the DuckDB twin used to pick it while the Spark side skipped it."""
+    import duckdb
+
+    from data_quality_spark.ops import similarity as S
+
+    train = spark.createDataFrame(
+        [(1, [0.6, 0.8]), (2, [1.0])], "vec_id long, embedding array<double>"
+    )
+    ev = spark.createDataFrame(
+        [(100, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    eng = [tuple(r) for r in
+           S.embedding_decontaminate(train, ev, threshold=0.99).collect()]
+    sql = S.sql_embedding_decontaminate(
+        "SELECT * FROM (VALUES (1::BIGINT, [0.6, 0.8]::DOUBLE[]),"
+        " (2::BIGINT, [1.0]::DOUBLE[])) t(id, v)",
+        "SELECT * FROM (VALUES (100::BIGINT, [1.0, 0.0]::DOUBLE[])) e(id, v)",
+        threshold=0.99,
+    )
+    ora = [tuple(r) for r in duckdb.connect().execute(sql).fetchall()]
+    assert eng == ora == [(100, 1, 0.6, False)]
 
 
 def test_ngram_novelty(spark):
