@@ -759,7 +759,6 @@ def drop_near_dups(
     id_col: str,
     pairs: DataFrame,
     policy: str = "keep_lowest",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Survivor set after near-dedup. Works with any pair source
     (minhash_lsh_pairs / simhash_pairs / cosine_lsh_pairs; id_a < id_b).
@@ -771,95 +770,28 @@ def drop_near_dups(
     one survivor per EDGE-dominated set, not per connected component.
 
     policy='cluster': exactly ONE survivor (the min id) per connected
-    component, via iterative min-label propagation over the pair graph
-    with POINTER JUMPING: each round first takes the neighbor minimum,
-    then re-labels through the label table itself (label(v) <-
-    label(label(v))), so label information travels 2^r hops after r rounds
-    — O(log diameter) rounds instead of O(diameter) on chain-shaped
-    components (the worst case LSH actually produces: a-b, b-c, c-d ...
-    near-dup chains). Bounded by max_iter — an unconverged residual leaves
-    extra survivors, never drops a whole cluster. The propagation runs on
-    the PAIR graph only (the candidate-dup set, ≪ corpus); the corpus-side
-    plan is the same single anti-join either way, so the wide frame never
-    shuffles (AQE broadcasts the loser set)."""
+    component of the pair graph, from graph.connected_components over
+    (id_a, id_b); the losers are the ids whose component label is not
+    themselves. Ids may be of any orderable type (numeric doc ids, url
+    strings). connected_components raises RuntimeError if it does not
+    converge within graph.CC_MAX_ROUNDS rounds, rather than leaving extra
+    survivors. The components run on the PAIR graph only (the
+    candidate-dup set, ≪ corpus); the corpus-side plan is the same single
+    anti-join either way, so the wide frame never shuffles (AQE broadcasts
+    the loser set)."""
     if policy == "keep_lowest":
         losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        return df.join(losers, on=id_col, how="left_anti")
-    if policy != "cluster":
+    elif policy == "cluster":
+        from data_quality_spark.ops.graph import connected_components
+
+        losers = (
+            connected_components(pairs, "id_a", "id_b")
+            .where(F.col("component") != F.col("host"))
+            .select(F.col("host").alias(id_col))
+        )
+    else:
         raise ValueError(f"unknown survivor policy: {policy}")
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    # pin the tiny id-pair table: without this every iteration's join (and
-    # each eager checkpoint) re-executes the WHOLE upstream pairs pipeline
-    # — for LSH input that is signature UDF + banding + verify, paid 1+r
-    # times over r propagation rounds instead of once
-    edges = edges.persist()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .persist()
-    )
-    labels.count()
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .select(edges["src"].alias("id"), F.col("label"))
-        )
-        hopped = (
-            labels.select("id", "label")
-            .unionByName(nbr_min)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
-        # pointer jump: label(v) <- label(label(v)). Every label value is
-        # itself a node id (initial labels are self-ids and mins of ids),
-        # so the self-join always hits; coalesce is belt-and-braces. Labels
-        # only decrease and stay >= the component min, so the fixpoint is
-        # unchanged — the jump only accelerates reaching it.
-        lab2 = hopped.select(
-            F.col("id").alias("__lid"), F.col("label").alias("__llabel")
-        )
-        # The jump self-joins the frame with itself, so the logical plan
-        # would DOUBLE every round (2^r nodes after r rounds — Catalyst
-        # driver OOM long before the data is big). Truncate lineage each
-        # round, exactly as GraphFrames' connected components does; the
-        # label table is the pair-graph node set (≪ corpus), so an eager
-        # local checkpoint of it is cheap. Reliable checkpoint is used
-        # when the session has a checkpoint dir (production path).
-        new = (
-            hopped.join(lab2, hopped["label"] == lab2["__lid"], "left")
-            .select(
-                "id",
-                F.coalesce(F.col("__llabel"), F.col("label")).alias("label"),
-            )
-        )
-        if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-            new = new.checkpoint(eager=True)
-        else:
-            new = new.localCheckpoint(eager=True)
-        changed = (
-            new.join(labels.withColumnRenamed("label", "__old"), "id")
-            .where(F.col("label") != F.col("__old"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            break
-    losers = labels.where(F.col("label") != F.col("id")).select(
-        F.col("id").alias(id_col)
-    )
-    out = df.join(losers, on=id_col, how="left_anti")
-    # labels is checkpoint-backed (eager, every iteration), so the edge
-    # cache is no longer reachable from `out` — release it now
-    edges.unpersist()
-    # the anti-join's loser set is materialized in `labels`; leave the
-    # persist in place for the caller's action and let Spark evict it
-    return out
+    return df.join(losers, on=id_col, how="left_anti")
 
 
 # ---------------------------------------------------------------------------

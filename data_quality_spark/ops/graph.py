@@ -24,8 +24,23 @@ dst plus a broadcast-or-shuffle join on src. Degrees are computed once.
 For real crawls, pre-aggregate the page-level link table to distinct host
 pairs first (edges_from_pages does this) — host-graph edges are ~10^9,
 not ~10^12. Iteration count is fixed (default 5 — host-rank priors
-converge fast and the consumer only thresholds the tail); checkpoint
-every few iterations if you raise it (lineage depth grows linearly).
+converge fast and the consumer only thresholds the tail).
+
+Edge hygiene: connected components, exact and HLL harmonic centrality
+and hits filter their input like edges_from_pages (NULL and '' hosts and
+self-loops never become nodes, duplicate edges count once), and their SQL
+twins apply the same filter (_sql_edges).
+
+Lineage rule, the same for every iterative op here (host_rank, hits,
+connected components, exact and HLL harmonic centrality); a pin is an
+eager localCheckpoint:
+  * frames that every iteration reads (edges, nodes, degrees) are pinned
+    once, at entry;
+  * each iteration's state is pinned once, so the plan of iteration k is
+    as deep as that of iteration 1 instead of growing with k;
+  * a frame that one iteration reads twice is pinned: two lazy reads of
+    the previous step double its subtree every step (hits' raw sums feed
+    both the normalization join and the broadcast max).
 
 Dangling hosts (no outlinks) FOLD their rank mass back into the teleport
 distribution each iteration (the canonical PageRank treatment — one extra
@@ -48,13 +63,6 @@ RANK_DAMP_PCT = 85           # damping factor d as an integer percentage
 RANK_ITERS = 5
 PERS_SCALE = 10**6           # personalized-teleport weights: 1.0 == 10^6
 RANK_MAX_WEIGHT = 10**6      # edge-weight ceiling: rank*w must fit bigint
-# localCheckpoint cadence: the dangling-mass fold references the previous
-# rank frame TWICE per iteration (contrib + dangling agg), so the
-# unmaterialized plan tree grows ~3^iters — ReuseExchange dedups the
-# identical subtrees at EXECUTION time (default iters=5 compiles and runs
-# fine), but plan compile cost would explode past ~8 iterations, so the
-# rank frame is pinned every 4
-RANK_CHECKPOINT_EVERY = 4
 
 
 def _personal_v6(
@@ -82,16 +90,13 @@ def _personal_v6(
     return rows
 
 
-def edges_from_pages(
-    df: DataFrame, src_host_col: str, dst_host_col: str
-) -> DataFrame:
-    """Distinct host-pair edges from a page-level link table (drops self
-    loops, NULL and '' hosts). Run this BEFORE host_rank on real crawls: it
-    collapses ~10^12 page links to ~10^9 host edges in one
-    partial-aggregated distinct. hits() applies it to its input."""
+def _clean_edges(df: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """(src, dst) rows of `df` without self-loops, NULL and '' hosts —
+    the edge-hygiene filter shared by edges_from_pages and the weighted
+    host_edges_from_pages_html (duplicates are kept)."""
     return (
         df.select(
-            F.col(src_host_col).alias("src"), F.col(dst_host_col).alias("dst")
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         )
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         # host_of returns '' (not NULL) for malformed/relative urls —
@@ -103,6 +108,35 @@ def edges_from_pages(
             & (F.col("dst").cast("string") != "")
         )
         .where(F.col("src") != F.col("dst"))
+    )
+
+
+def edges_from_pages(
+    df: DataFrame, src_host_col: str, dst_host_col: str
+) -> DataFrame:
+    """Distinct host-pair edges from a page-level link table (drops self
+    loops, NULL and '' hosts). Run this BEFORE host_rank on real crawls: it
+    collapses ~10^12 page links to ~10^9 host edges in one
+    partial-aggregated distinct. connected_components, harmonic_exact,
+    harmonic_hll and hits apply it to their input."""
+    return _clean_edges(df, src_host_col, dst_host_col).distinct()
+
+
+def _sql_edges(edges_sql: str) -> str:
+    """SQL twin of edges_from_pages over a (src, dst) query."""
+    return (
+        f"SELECT DISTINCT src, dst FROM ({edges_sql})"
+        " WHERE src IS NOT NULL AND dst IS NOT NULL"
+        " AND CAST(src AS VARCHAR) <> '' AND CAST(dst AS VARCHAR) <> ''"
+        " AND src <> dst"
+    )
+
+
+def _nodes(e: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """Distinct node ids (column `host`) of an edge frame."""
+    return (
+        e.select(F.col(a).alias("host"))
+        .unionByName(e.select(F.col(b).alias("host")))
         .distinct()
     )
 
@@ -135,14 +169,8 @@ def host_edges_from_pages_html(
     if not weighted:
         return edges_from_pages(pairs, "src_host", "dst_host")
     return (
-        pairs.where(
-            pairs["src_host"].isNotNull() & pairs["dst_host"].isNotNull()
-        )
-        .where((F.col("src_host") != "") & (F.col("dst_host") != ""))
-        .where(F.col("src_host") != F.col("dst_host"))
-        .groupBy(
-            F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-        )
+        _clean_edges(pairs, "src_host", "dst_host")
+        .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
 
@@ -204,16 +232,23 @@ def host_rank(
     (src, dst, w); nothing wide ever shuffles, and each iteration is one
     shuffle on dst plus the 1-row broadcast dangling aggregate (the
     src-side degree/rank join broadcasts when the host table fits, else
-    shuffle-joins on src). The rank frame is localCheckpoint-ed every
-    RANK_CHECKPOINT_EVERY iterations so the plan tree stays bounded (the
-    dangling fold references rank twice per iteration — see the constant;
-    each checkpoint is an eager (host, bigint) materialization)."""
+    shuffle-joins on src). Whether a host is dangling does not change
+    between iterations, so it is a static flag on the nodes frame, and
+    the dangling mass is one filtered sum over the rank state."""
     src, dst = F.col(src_col), F.col(dst_col)
     if weight_col is not None:
         e = edges.select(
             src.alias("src"), dst.alias("dst"),
             F.col(weight_col).cast("bigint").alias("__w"),
         ).groupBy("src", "dst").agg(F.sum("__w").alias("__w"))
+    else:
+        e = (
+            edges.select(src.alias("src"), dst.alias("dst"))
+            .distinct()
+            .withColumn("__w", F.lit(1).cast("bigint"))
+        )
+    e = e.localCheckpoint(eager=True)
+    if weight_col is not None:
         # contract gate (one tiny 1-row agg): rank*w must fit bigint, and
         # w < 1 would zero/NULL the floor division — both fail loudly here
         # instead of wrapping silently under ANSI-off arithmetic
@@ -229,18 +264,21 @@ def host_rank(
                 f"max={wrow['mx']}); pre-scale page-level link counts "
                 "(e.g. log-bucket or cap them) before ranking"
             )
-    else:
-        e = (
-            edges.select(src.alias("src"), dst.alias("dst"))
-            .distinct()
-            .withColumn("__w", F.lit(1).cast("bigint"))
-        )
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
+    deg = (
+        e.groupBy("src").agg(F.sum("__w").alias("__deg"))
+        .localCheckpoint(eager=True)
     )
-    n = nodes.count()  # one tiny job; the scalar parameterizes the plan
+    nodes = (
+        _nodes(e)
+        .join(
+            deg.select(F.col("src").alias("host"), F.lit(False).alias("__o")),
+            "host",
+            "left",
+        )
+        .select("host", F.col("__o").isNull().alias("__dangling"))
+        .localCheckpoint(eager=True)
+    )
+    n = nodes.count()  # the scalar parameterizes the plan
     if n == 0:
         # empty edge table (e.g. a snapshot with no absolute outlinks):
         # empty rank frame, not a ZeroDivisionError on the driver
@@ -267,6 +305,7 @@ def host_rank(
             nodes.join(F.broadcast(pv_df), "host", "left")
             .select(
                 "host",
+                "__dangling",
                 F.coalesce("__v6", F.lit(0)).alias("__v6"),
                 F.coalesce("__init", F.lit(0)).alias("__init"),
                 F.coalesce("__base", F.lit(0)).alias("__base"),
@@ -297,12 +336,12 @@ def host_rank(
         init_col = F.lit(init)
         base_col = F.lit(base)
         dang_col = F.expr(f"__dm div {n}")
-    deg = e.groupBy("src").agg(F.sum("__w").alias("__deg"))
-    deg_hosts = deg.select(F.col("src").alias("host"))
-    rank = nodes.select("host", init_col.cast("bigint").alias("__r"))
-    for it in range(iters):
+    rank = nodes.select(
+        "host", "__dangling", init_col.cast("bigint").alias("__r")
+    )
+    for _ in range(iters):
         contrib = (
-            e.join(rank.withColumnRenamed("host", "src"), "src")
+            e.join(rank.select(F.col("host").alias("src"), "__r"), "src")
             .join(deg, "src")
             .select(
                 F.col("dst").alias("host"),
@@ -312,15 +351,15 @@ def host_rank(
         inflow = contrib.groupBy("host").agg(F.sum("__c").alias("__in"))
         # dangling mass: rank parked on hosts with no out-edges, folded
         # back through the teleport distribution (1 row, broadcast)
-        dang = (
-            rank.join(deg_hosts, "host", "left_anti")
-            .agg(F.coalesce(F.sum("__r"), F.lit(0)).alias("__dm"))
+        dang = rank.where("__dangling").agg(
+            F.coalesce(F.sum("__r"), F.lit(0)).alias("__dm")
         )
         rank = (
             nodes.join(inflow, "host", "left")
             .crossJoin(F.broadcast(dang))
             .select(
                 "host",
+                "__dangling",
                 base_col.cast("bigint").alias("__b"),
                 (F.expr("coalesce(__in, 0L)") + dang_col)
                 .cast("bigint")
@@ -328,13 +367,13 @@ def host_rank(
             )
             .select(
                 "host",
+                "__dangling",
                 (F.col("__b") + F.expr(f"({damp_pct} * __g) div 100"))
                 .cast("bigint")
                 .alias("__r"),
             )
+            .localCheckpoint(eager=True)
         )
-        if (it + 1) % RANK_CHECKPOINT_EVERY == 0 and (it + 1) < iters:
-            rank = rank.localCheckpoint(eager=True)
     return rank.select(
         "host",
         F.col("__r").alias("rank_units"),
@@ -351,7 +390,8 @@ def sql_host_rank(
 ) -> str:
     """DuckDB twin of host_rank: the power iteration unrolled as chained
     CTEs over the SAME integer micro-unit arithmetic (`//` = `div`),
-    including the per-iteration dangling-mass fold (d{i} CTEs) and all
+    including the per-iteration dangling-mass fold (d{i} CTEs, a sum over
+    the static nodes.dangling flag) and all
     three teleport modes (None / seed iterable / personalized dict —
     dict weights normalized by the shared _personal_v6 and rendered as a
     VALUES list, so both engines see identical literals).
@@ -369,7 +409,10 @@ def sql_host_rank(
         )
     ctes = [
         e_cte,
-        "nodes AS (SELECT src AS host FROM e UNION SELECT dst FROM e)",
+        "deg AS (SELECT src, sum(w)::BIGINT AS d FROM e GROUP BY 1)",
+        "nodes AS (SELECT h.host, deg.src IS NULL AS dangling FROM"
+        " (SELECT src AS host FROM e UNION SELECT dst FROM e) h"
+        " LEFT JOIN deg ON deg.src = h.host)",
     ]
     iter_from = "FROM nodes n"
     if isinstance(teleport, dict):
@@ -429,18 +472,17 @@ def sql_host_rank(
         dang_expr = (
             lambda i: f"(SELECT dm FROM d{i}) // (SELECT n FROM params)"
         )
-    ctes += [
-        "deg AS (SELECT src, sum(w)::BIGINT AS d FROM e GROUP BY 1)",
-        f"r0 AS (SELECT n.host, ({init_expr})::BIGINT AS r {init_from})",
-    ]
+    ctes.append(
+        f"r0 AS (SELECT n.host, n.dangling, ({init_expr})::BIGINT AS r"
+        f" {init_from})"
+    )
     for i in range(iters):
         ctes.append(
             f"d{i} AS (SELECT coalesce(sum(r), 0)::BIGINT AS dm"
-            f" FROM r{i} rr WHERE NOT EXISTS"
-            " (SELECT 1 FROM deg WHERE deg.src = rr.host))"
+            f" FROM r{i} WHERE dangling)"
         )
         ctes.append(
-            f"r{i + 1} AS (SELECT n.host, {base_expr}"
+            f"r{i + 1} AS (SELECT n.host, n.dangling, {base_expr}"
             f" + ({damp_pct} * (coalesce(f.s, 0)"
             f" + ({dang_expr(i)}))) // 100 AS r"
             f" {iter_from} LEFT JOIN ("
@@ -495,9 +537,9 @@ def connected_components(
     """Undirected connected components via LARGE-STAR / SMALL-STAR
     alternation (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC 2014) — the O(log n)-round web-graph algorithm, vs the
-    O(diameter) rounds of plain min-label propagation (dedup.drop_near_dups
-    uses the latter because verified near-dup clusters have tiny diameter;
-    host graphs do not).
+    O(diameter) rounds of plain min-label propagation. It is the one
+    connected-components engine: dedup.drop_near_dups(policy='cluster')
+    runs it over the verified near-dup pair graph.
 
     large-star: every node points its LARGER neighbors at the minimum of
     its neighborhood; small-star: every node and its smaller neighbors
@@ -505,8 +547,8 @@ def connected_components(
     pass; edges shuffle as bare (node, node) pairs, payloads never move.
     The edge set monotonically contracts to per-component stars rooted at
     the component minimum; convergence is detected by an order-independent
-    (count, XOR hash) fingerprint (one tiny agg per round) and each round is
-    localCheckpoint-ed so lineage depth stays O(1) instead of O(rounds).
+    (count, XOR hash) fingerprint (one tiny agg per round). Raises
+    RuntimeError after max_rounds without convergence.
 
     Node ids order by their natural type ordering (host strings: binary
     ASCII compare — identical in Spark and DuckDB); the component label is
@@ -516,22 +558,16 @@ def connected_components(
     Returns (host, component, component_size). Scale shape: ~10^9 host
     edges → each pass is one (node, node) shuffle; O(log n) ≈ 30 rounds
     worst-case on a 10^8-node graph, each strictly contracting."""
-    src, dst = F.col(src_col), F.col(dst_col)
     e = (
-        edges.select(
-            F.least(src, dst).alias("b"), F.greatest(src, dst).alias("a")
+        _clean_edges(edges, src_col, dst_col)
+        .select(  # (a, b) with a > b
+            F.greatest("src", "dst").alias("a"),
+            F.least("src", "dst").alias("b"),
         )
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .where(F.col("a") != F.col("b"))
-        .select("a", "b")  # (a, b) with a > b
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("a").alias("host"))
-        .unionByName(e.select(F.col("b").alias("host")))
-        .distinct()
-    )
-    e = e.localCheckpoint(eager=True)
+    nodes = _nodes(e, "a", "b")
     prev = _cc_checksum(e)
     for _ in range(max_rounds):
         # large-star: undirected adjacency; u's LARGER neighbors attach to
@@ -608,8 +644,7 @@ def sql_connected_components(edges_sql: str) -> str:
     return f"""
 WITH RECURSIVE e AS (
   SELECT DISTINCT least(src, dst) AS b, greatest(src, dst) AS a
-  FROM ({edges_sql})
-  WHERE src IS NOT NULL AND dst IS NOT NULL AND src <> dst
+  FROM ({_sql_edges(edges_sql)})
 ),
 -- explicit DISTINCT: under WITH RECURSIVE DuckDB parses a bare UNION in a
 -- plain CTE as base+append (no dedup), so spell the dedup out
@@ -656,22 +691,12 @@ def harmonic_exact(
     graphs and for the oracle gate, but on a 10^8-node host graph the
     ball union is the whole graph; use harmonic_hll (O(nodes × 2^b)
     state, the HyperBall scale path) there and keep this as its
-    ground-truth twin on samples. Each round localCheckpoints the reached
-    set (lineage O(1)); the per-round empty-frontier stop is one count.
+    ground-truth twin on samples. The per-round empty-frontier stop is
+    one count.
 
     Returns (host, n_reach, harmonic_units, harmonic)."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(src.alias("src"), dst.alias("dst"))
-        .where(src.isNotNull() & dst.isNotNull())
-        .where(src != dst)
-        .distinct()
-    )
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-    )
+    e = edges_from_pages(edges, src_col, dst_col).localCheckpoint(eager=True)
+    nodes = _nodes(e)
     reached = nodes.select(
         F.col("host").alias("v"), F.col("host").alias("u"),
         F.lit(0).cast("int").alias("d"),
@@ -724,10 +749,7 @@ def sql_harmonic_exact(edges_sql: str, radius: int = 6) -> str:
     (UNION-dedup terminates it), min-distance per pair, the same integer
     micro-unit harmonic sum."""
     return f"""
-WITH RECURSIVE e AS (
-  SELECT DISTINCT src, dst FROM ({edges_sql})
-  WHERE src IS NOT NULL AND dst IS NOT NULL AND src <> dst
-),
+WITH RECURSIVE e AS ({_sql_edges(edges_sql)}),
 -- explicit DISTINCT: see sql_connected_components note on UNION under RECURSIVE
 nodes AS (SELECT DISTINCT host FROM (SELECT src AS host FROM e UNION ALL SELECT dst FROM e)),
 walk(v, u, d) AS (
@@ -842,7 +864,7 @@ def harmonic_hll(
     is O(nodes × m) — 64 small ints per node, NOT the O(Σ ball sizes)
     pair set of the exact op; each round shuffles |E| + |V| sketch rows
     through ONE groupBy whose 64 max-aggregates partial-aggregate
-    map-side, and rounds are localCheckpoint-ed (lineage stays O(1)).
+    map-side.
 
     DETERMINISM: registers derive from md5 string ops (_hll_bucket_rho);
     the register state collapses to the exact bigint S_t = Σ_j
@@ -858,18 +880,8 @@ def harmonic_hll(
     Returns (host, s_units, reach_est, harmonic_est)."""
     if radius < 1:
         raise ValueError("harmonic_hll: radius must be >= 1")
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(src.alias("src"), dst.alias("dst"))
-        .where(src.isNotNull() & dst.isNotNull())
-        .where(src != dst)
-        .distinct()
-    )
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-    )
+    e = edges_from_pages(edges, src_col, dst_col).localCheckpoint(eager=True)
+    nodes = _nodes(e)
     bucket, rho = _hll_bucket_rho(F.col("host"))
     cur = nodes.select(
         "host",
@@ -947,10 +959,7 @@ def sql_harmonic_hll(edges_sql: str, radius: int = 6) -> str:
         f"JOIN s{t} ON s{t}.host = s0.host" for t in range(1, radius + 1)
     )
     return f"""
-WITH RECURSIVE e AS (
-  SELECT DISTINCT src, dst FROM ({edges_sql})
-  WHERE src IS NOT NULL AND dst IS NOT NULL AND src <> dst
-),
+WITH RECURSIVE e AS ({_sql_edges(edges_sql)}),
 nodes AS (SELECT DISTINCT host FROM
           (SELECT src AS host FROM e UNION ALL SELECT dst FROM e)),
 hh AS (
@@ -1130,31 +1139,12 @@ def hits(
     Scale shape: state is two bigints per host; each iteration exchanges
     (host, bigint) twice. Degrees are validated ≤ HITS_MAX_DEG=10^6 (one
     tiny agg) so the normalization multiply can't wrap bigint with ANSI
-    off. The edge/node frames are pinned once and each half-step's raw-sum
-    frame is localCheckpoint-pinned (it is referenced twice — join + max —
-    so a lazy chain grows ~4^iters; the pin keeps every job shallow and
-    runtime linear in iters, the GraphX-style iterative materialization).
-
-    The input goes through edges_from_pages first: self-loops, NULL and
-    '' hosts never become nodes, and duplicate edges count once.
+    off.
 
     Returns (host, auth_units, hub_units, auth double, hub double).
     """
-    # pin the edge and node frames ONCE: every iteration references e twice
-    # and nodes twice, and the two degree-validation aggs below are eager —
-    # without the pin each of those subtrees re-derives the edge set from
-    # the source scan (for host graphs built from a pages table that is the
-    # full extract+explode+distinct, re-run ~4×iters times). The pinned
-    # frames are bare (host, host) / (host) rows — the standard iterative-
-    # graph materialization (GraphX does the same), executor-storage-sized
-    # by the HOST graph, not the corpus.
     e = edges_from_pages(edges, src_col, dst_col).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _nodes(e).localCheckpoint(eager=True)
     degs = e.groupBy("src").count().agg(F.max("count")).first()[0]
     degd = e.groupBy("dst").count().agg(F.max("count")).first()[0]
     if degs is None:  # empty edge set
@@ -1175,14 +1165,11 @@ def hits(
         "host", F.lit(HITS_SCALE).cast("bigint").alias("__h")
     )
     auth = None
-    for it in range(iters):
-        # each half-step references its raw-sum frame TWICE (normalization
-        # join + the 1-row max) — left lazy, the plan tree grows ~4^iters
-        # and, unlike host_rank's single dangling agg, Spark does NOT
-        # manage to reuse the exchanges across the broadcast boundary here
-        # (measured: 2 iters 4.6 s → 4 iters 31 s on the sf0.1 fixture).
-        # Pinning the raw frame per half-step makes every lineage shallow
-        # (two eager (host, bigint) jobs per iteration, values unchanged).
+    for _ in range(iters):
+        # the raw sums are the pinned state: each is read twice (the
+        # normalization join and the 1-row max), and Spark does not reuse
+        # the exchange across the broadcast boundary (left lazy, 2 iters
+        # took 4.6 s and 4 iters 31 s on the sf0.1 fixture)
         a_raw = (
             e.join(hub.withColumnRenamed("host", "src"), "src")
             .groupBy(F.col("dst").alias("host"))
@@ -1243,11 +1230,7 @@ def sql_hits(edges_sql: str, iters: int = HITS_ITERS) -> str:
     with localCheckpoint).
     edges_sql must yield (src, dst) with the same rows as the Spark side."""
     ctes = [
-        # the edges_from_pages filter hits() applies to its input
-        f"e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_sql})"
-        " WHERE src IS NOT NULL AND dst IS NOT NULL"
-        " AND CAST(src AS VARCHAR) <> '' AND CAST(dst AS VARCHAR) <> ''"
-        " AND src <> dst)",
+        f"e AS MATERIALIZED ({_sql_edges(edges_sql)})",
         "nodes AS MATERIALIZED"
         " (SELECT src AS host FROM e UNION SELECT dst FROM e)",
         f"h0 AS MATERIALIZED"

@@ -548,7 +548,7 @@ def dedup_kept(kept: DataFrame, mode: str | None) -> DataFrame:
                      keep-lowest survivor policy).
     mode='minhash_cluster' — as 'minhash' but cluster-exact survivors:
                      ONE survivor per connected component of the pair
-                     graph (min-label propagation).
+                     graph (graph.connected_components).
 
     Scale note: within one run the single-pass job processes every pending
     bucket in ONE frame, so dedup here is GLOBAL for a fresh run; a resumed

@@ -783,8 +783,8 @@ WHERE doc_id NOT IN (SELECT id_b FROM ({_sql_minhash_lsh()}))
 def q_dedup_cluster_drop(spark, sf_dir):
     """Cluster-exact survivor set: ONE survivor (min id) per connected
     component of the verified near-dup pair graph
-    (drop_near_dups(policy='cluster') — bounded min-label propagation).
-    Oracle: the same components via a DuckDB recursive CTE."""
+    (drop_near_dups(policy='cluster') — graph.connected_components over
+    the pairs). Oracle: the same components via sql_connected_components."""
     corpus = _near_dup_corpus(spark, sf_dir)
     pairs = D.minhash_lsh_pairs(
         corpus, "doc_id", "text", threshold=MINHASH_THRESHOLD
@@ -795,28 +795,13 @@ def q_dedup_cluster_drop(spark, sf_dir):
 
 
 def _sql_cluster_drop() -> str:
-    # connected components in SQL: reach(a,b) = b reachable from a over the
-    # undirected pair graph; component label = min reachable id (incl.
-    # self); survivors = rows that are their own label (plus rows not in
-    # the graph at all)
+    # losers: pair-graph nodes that are not their component's min id
+    cc = G.sql_connected_components(
+        f"SELECT id_a AS src, id_b AS dst FROM ({_sql_minhash_lsh()})"
+    )
     return f"""
-WITH RECURSIVE
-pairs AS ({_sql_minhash_lsh()}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON e.src = r.dst
-),
-label AS (
-  SELECT src AS id, least(min(dst), src) AS label FROM reach GROUP BY src
-)
 SELECT doc_id FROM ({SQL_NEAR_CORPUS})
-WHERE doc_id NOT IN (SELECT id FROM label WHERE label <> id)
+WHERE doc_id NOT IN (SELECT host FROM ({cc}) WHERE component <> host)
 """
 
 

@@ -1138,7 +1138,7 @@ def test_drop_near_dups_cluster_policy(spark):
         for r in D.drop_near_dups(docs, "id", pairs, policy="cluster").collect()
     )
     assert cl == [1, 4, 7, 8]  # one survivor per component
-    # a long chain converges too (diameter 6 < max_iter)
+    # a long chain converges too
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "id_a long, id_b long"
     )
@@ -1147,6 +1147,20 @@ def test_drop_near_dups_cluster_policy(spark):
         for r in D.drop_near_dups(docs, "id", chain, policy="cluster").collect()
     )
     assert cl2 == [1]
+    # url-like string ids (the pipeline's minhash_cluster dedup keys on url)
+    url = lambda i: f"https://h{i}.example/p"  # noqa: E731
+    udocs = spark.createDataFrame(
+        [(url(i), f"d{i}") for i in range(1, 9)], "url string, text string"
+    )
+    upairs = spark.createDataFrame(
+        [(url(a), url(b)) for a, b in [(1, 3), (2, 3), (4, 5), (5, 6)]],
+        "id_a string, id_b string",
+    )
+    ucl = sorted(
+        r["url"]
+        for r in D.drop_near_dups(udocs, "url", upairs, policy="cluster").collect()
+    )
+    assert ucl == [url(1), url(4), url(7), url(8)]
 
 
 def test_sample_stratified_deterministic(spark, sf_dir):
@@ -1698,17 +1712,16 @@ def test_pack_shards(spark):
     )
 
 
-def test_drop_near_dups_cluster_pointer_jumping(spark):
-    # 64-node chain 0-1-2-...-63: plain neighbor-min needs ~63 hops; the
-    # pointer-jumped propagation must collapse it within ~log2(64)+margin
-    # rounds — max_iter=8 would leave stragglers without the jump.
+def test_drop_near_dups_cluster_long_chain(spark):
+    # 64-node chain 0-1-2-...-63: plain neighbor-min needs ~63 rounds; the
+    # star-alternation components must collapse it to the single min id
+    # inside CC_MAX_ROUNDS.
     n = 64
     df = spark.createDataFrame([(i, f"t{i}") for i in range(n)],
                                "doc_id long, text string")
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "id_a long, id_b long")
-    kept = D.drop_near_dups(df, "doc_id", pairs, policy="cluster",
-                            max_iter=8)
+    kept = D.drop_near_dups(df, "doc_id", pairs, policy="cluster")
     assert sorted(r["doc_id"] for r in kept.collect()) == [0]
 
 
@@ -2784,9 +2797,9 @@ def test_host_rank_personalized_exact_recurrence(spark):
 
 
 def test_host_rank_weight_clamp_and_deep_iters(spark):
-    """Out-of-range edge weights raise loudly (bigint-wrap guard); deep
-    iteration counts localCheckpoint the rank frame and still produce the
-    exact python-recurrence values."""
+    """Out-of-range edge weights raise loudly (bigint-wrap guard); a deep
+    iteration count (each iteration pins the rank frame) still produces
+    the exact python-recurrence values."""
     from data_quality_spark.ops import graph as G
     import pytest as _pytest
 
@@ -2802,7 +2815,6 @@ def test_host_rank_weight_clamp_and_deep_iters(spark):
                                   "src string, dst string, w long"),
             weight_col="w",
         )
-    # iters > 12 triggers the checkpoint path (lineage hygiene)
     edges = spark.createDataFrame(
         [("a.example", "b.example"), ("b.example", "a.example")],
         "src string, dst string",
@@ -3168,9 +3180,9 @@ def test_registered_domain_psl_semantics(spark):
 
 
 def test_host_rank_deep_iterations_checkpointed(spark):
-    """iters=9 crosses two localCheckpoint boundaries (RANK_CHECKPOINT_
-    EVERY=4): values must still equal the pure-python recurrence exactly
-    — the checkpoint is a plan-tree pin, never a semantic change."""
+    """iters=9 pins the rank frame nine times: values must still equal
+    the pure-python recurrence exactly — the checkpoint is a plan-tree
+    pin, never a semantic change."""
     from data_quality_spark.ops import graph as G
 
     leaves = [f"l{i}.example" for i in range(6)]
@@ -3191,6 +3203,25 @@ def test_host_rank_deep_iterations_checkpointed(spark):
             inflow["hub.example"] += rank[leaf]
         rank = {h: base + (G.RANK_DAMP_PCT * inflow[h]) // 100 for h in rank}
     assert got == rank
+
+
+def test_host_rank_plan_does_not_grow_with_iters(spark):
+    """Each iteration pins the rank frame, so the analyzed plan of the
+    result is the same size at 8 iterations as at 2 (left lazy, the
+    dangling fold's double read of rank grows it ~3^k)."""
+    from data_quality_spark.ops import graph as G
+
+    edges = spark.createDataFrame(
+        [("a.example", "b.example"), ("b.example", "c.example"),
+         ("c.example", "a.example"), ("c.example", "d.example")],
+        "src string, dst string",
+    )
+
+    def plan_lines(k):
+        qe = G.host_rank(edges, iters=k)._jdf.queryExecution()
+        return len(qe.analyzed().toString().splitlines())
+
+    assert plan_lines(8) <= plan_lines(2) + 2
 
 
 def _py_hits(edges, iters):
@@ -3242,7 +3273,7 @@ def test_hits_bipartite_python_twin(spark):
 
 
 def test_hits_checkpoint_parity_and_guards(spark):
-    """iters crossing the localCheckpoint cadence must not change values
+    """Six iterations of per-half-step pins must not change values
     (pinning is a plan-shape concern only); empty edge sets return an
     empty frame; a super-node beyond HITS_MAX_DEG raises."""
     from data_quality_spark.ops import graph as G
@@ -3250,7 +3281,7 @@ def test_hits_checkpoint_parity_and_guards(spark):
     edges = [(f"s{i}.example", f"t{(i * 3 + j) % 4}.example")
              for i in range(5) for j in range(2)]
     df = spark.createDataFrame(edges, "src string, dst string")
-    iters = G.RANK_CHECKPOINT_EVERY + 2
+    iters = 6
     got = {r["host"]: (r["auth_units"], r["hub_units"])
            for r in G.hits(df, iters=iters).collect()}
     auth, hub = _py_hits(edges, iters)
@@ -3305,6 +3336,39 @@ def test_hits_drops_self_loops_and_empty_hosts(spark):
     # cast '' to NULL and drop every edge)
     ints = spark.createDataFrame([(1, 2), (2, 3), (3, 3)], "src long, dst long")
     assert sorted(r["host"] for r in G.hits(ints).collect()) == [1, 2, 3]
+
+
+def test_cc_and_harmonic_drop_self_loops_and_empty_hosts(spark):
+    """connected_components and harmonic_exact filter their input like
+    edges_from_pages: an edge from a '' host and a self-loop change
+    nothing, on the Spark side and in the DuckDB twins alike."""
+    import duckdb
+
+    from data_quality_spark.ops import graph as G
+
+    clean = [("b.example", "c.example"), ("c.example", "d.example"),
+             ("x.example", "y.example")]
+    dirty = clean + [("", "b.example"), ("c.example", "c.example")]
+
+    def sql(fn, edges, **kw):
+        vals = ", ".join(f"('{s}', '{d}')" for s, d in edges)
+        q = fn(f"SELECT * FROM (VALUES {vals}) t(src, dst)", **kw)
+        return sorted(duckdb.connect().execute(q).fetchall())
+
+    def spark_rows(fn, edges, **kw):
+        df = spark.createDataFrame(edges, "src string, dst string")
+        return sorted(tuple(r) for r in fn(df, **kw).collect())
+
+    cc = spark_rows(G.connected_components, clean)
+    assert cc == [("b.example", "b.example", 3), ("c.example", "b.example", 3),
+                  ("d.example", "b.example", 3), ("x.example", "x.example", 2),
+                  ("y.example", "x.example", 2)]
+    assert spark_rows(G.connected_components, dirty) == cc
+    assert sql(G.sql_connected_components, dirty) == cc
+    hx = spark_rows(G.harmonic_exact, clean, radius=2)
+    assert len(hx) == 5
+    assert spark_rows(G.harmonic_exact, dirty, radius=2) == hx
+    assert sql(G.sql_harmonic_exact, dirty, radius=2) == hx
 
 
 def test_degree_stats(spark):
