@@ -34,6 +34,7 @@ import copy
 import json
 from dataclasses import asdict, dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -637,6 +638,9 @@ def _read_bloom(spark: SparkSession, path: str):
     return spark.read.parquet(path)
 
 
+_BLOOM_SCHEMA = pa.schema([("word_idx", pa.int64()), ("bits", pa.int64())])
+
+
 def _update_bloom_index(
     spark: SparkSession, path: str, kept_root: str, pending: list, m: int
 ) -> None:
@@ -667,12 +671,11 @@ def _update_bloom_index(
         merged = D.bloom_merge(old, new)
     else:
         merged = new if new is not None else old
-    rows = (
-        [(int(r["word_idx"]), int(r["bits"])) for r in merged.collect()]
-        if merged is not None
-        else []
-    )
-    out = spark.createDataFrame(rows, "word_idx bigint, bits bigint")
+    # staged as an Arrow table, not Rows: createDataFrame turns it into a
+    # LocalRelation (empty too), so the ≤m/64 rows need no per-row Python
+    # loop, no Spark job and no Python worker on the way back
+    staged = merged.toArrow() if merged is not None else _BLOOM_SCHEMA.empty_table()
+    out = spark.createDataFrame(staged, "word_idx bigint, bits bigint")
     out.coalesce(1).write.mode("overwrite").parquet(path)
     # record the geometry the bitmap was built under — later runs reuse it
     # when bloom_m is omitted and refuse a contradicting explicit value

@@ -14,9 +14,12 @@ the same mold: windows evaluate inside the projection, joins are applied as
 ``prepare`` transforms (broadcast left joins) before the projection.
 
 Scale notes (100 TB): the projection is whole-stage-codegen'd (pure Column
-exprs, no Python); metrics are one partial-aggregated ``agg`` (map-side
-combine, tiny shuffle: one row per partition × rules); samples use
-``limit`` (CollectLimitExec early-out, no full scan).
+exprs, no Python); metrics are one lazy plan: a partial-aggregated ``agg``
+(map-side combine, tiny shuffle: one row per partition × rules) unpivoted
+to one row per rule inside Catalyst, so a caller's single collect is the
+only job and no Python worker starts (a driver-side row re-wrapped with
+``createDataFrame(list)`` would cost one more job, run in Python workers);
+samples use ``limit`` (CollectLimitExec early-out, no full scan).
 """
 
 from __future__ import annotations
@@ -101,6 +104,11 @@ class CheckResult:
     flag_over_max_rows: bool = False
 
 
+METRICS_SCHEMA = (
+    "rule_id:string,description:string,severity:string,n_ko:bigint,n_rows:bigint"
+)
+
+
 class RuleEngine:
     """Single-pass evaluator for a rule list over one DataFrame."""
 
@@ -124,6 +132,10 @@ class RuleEngine:
 
     def _flag_name(self, r: Rule) -> str:
         return f"__ko_{r.rule_id}"
+
+    def _memo_key(self) -> tuple:
+        """All that the memoized annotate/metrics Columns depend on."""
+        return tuple((r.rule_id, r.description, r.severity) for r in self.rules)
 
     def flags(self, df: DataFrame) -> DataFrame:
         """ONE projection evaluating every rule to a boolean column.
@@ -151,9 +163,9 @@ class RuleEngine:
         the array in place with array_compact(when...).
         """
         flagged = self.flags(df)
-        key = tuple((r.rule_id, r.description, r.severity) for r in self.rules)
         out = flagged
-        for name, col in memo(("rules.annotate", key), self._annotate_cols):
+        key = ("rules.annotate", self._memo_key())
+        for name, col in memo(key, self._annotate_cols):
             out = out.withColumn(name, col)
         return out.drop(*[self._flag_name(r) for r in self.rules])
 
@@ -197,12 +209,19 @@ class RuleEngine:
         )
 
     def metrics(self, df: DataFrame, flagged: DataFrame | None = None) -> DataFrame:
-        """Per-rule KO counts in ONE aggregate scan.
+        """Per-rule KO counts as ONE lazy plan over one aggregate scan.
 
         Reference equivalent: one COUNT(*) GROUP BY verdict query PER check
-        (check.py:84-108). Here: agg(sum(flag::long) per rule) — partial
-        aggregation map-side, shuffle is one row per partition.
+        (check.py:84-108). Here: agg(count, coalesce(sum(flag::long), 0)
+        per rule) — partial aggregation map-side, shuffle is one row per
+        partition — unpivoted to one row per rule by inline(array(struct))
+        over that single aggregate row.
         Returns (rule_id, description, severity, n_ko, n_rows).
+
+        Nothing runs until the caller collects. The plan never passes
+        through the driver: `createDataFrame(list)` of a collected row would
+        cost an extra Spark job run in Python workers (parallelize plus an
+        identity map) on a path with no Python UDF.
 
         Pass a precomputed (possibly cached) `flags(df)` frame via
         `flagged` to share one evaluation with ko_rows — prepare transforms
@@ -210,20 +229,35 @@ class RuleEngine:
         per consumer."""
         if flagged is None:
             flagged = self.flags(df)
+        aggs, rows = memo(("rules.metrics", self._memo_key()), self._metrics_cols)
+        return flagged.agg(*aggs).select(rows)
+
+    def _metrics_cols(self) -> tuple:
+        """(aggregate Columns, unpivot Column) of metrics(). Like
+        _annotate_cols they depend only on each rule's (id, description,
+        severity), so they are built once per JVM per rule set (colmemo)."""
         aggs = [F.count(F.lit(1)).alias("__n")] + [
-            F.sum(F.col(self._flag_name(r)).cast("long")).alias(self._flag_name(r))
+            F.coalesce(F.sum(F.col(self._flag_name(r)).cast("long")), F.lit(0))
+            .alias(self._flag_name(r))
             for r in self.rules
         ]
-        row = flagged.agg(*aggs).collect()[0]
-        n = row["__n"]
-        spark = df.sparkSession
-        data = [
-            (r.rule_id, r.description, r.severity, int(row[self._flag_name(r)] or 0), n)
-            for r in self.rules
-        ]
-        return spark.createDataFrame(
-            data, "rule_id string, description string, severity string, n_ko long, n_rows long"
+        # the cast types the array of an empty rule list and makes every
+        # field nullable, so the schema never depends on the rules
+        rows = F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(r.rule_id).alias("rule_id"),
+                        F.lit(r.description).alias("description"),
+                        F.lit(r.severity).alias("severity"),
+                        F.col(self._flag_name(r)).alias("n_ko"),
+                        F.col("__n").alias("n_rows"),
+                    )
+                    for r in self.rules
+                ]
+            ).cast(f"array<struct<{METRICS_SCHEMA}>>")
         )
+        return tuple(aggs), rows
 
     def ko_rows(
         self,

@@ -16,11 +16,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_quality_spark.rules import checks as C
 from data_quality_spark.rules.core import CheckResult, Rule, RuleEngine, not_empty
+
+_RESULTS_SCHEMA = pa.schema([
+    ("table", pa.string()), ("rule_id", pa.string()), ("description", pa.string()),
+    ("severity", pa.string()), ("n_ko", pa.int64()), ("n_rows", pa.int64()),
+    ("flag_ko", pa.bool_()),
+])
 
 
 def infer_datetime_format(df: DataFrame, col: str, sample: int = 100) -> str | None:
@@ -325,6 +332,8 @@ class QualityTable:
         if get_rows_flag:
             flagged = flagged.persist()
         try:
+            # metrics() is a lazy plan: this collect is its only Spark job
+            # (the aggregate's shuffle stage aside), and no Python worker runs
             m = {
                 row["rule_id"]: row
                 for row in eng.metrics(df, flagged=flagged).collect()
@@ -371,15 +380,16 @@ class QualityTable:
         return RuleEngine(self.rules).annotate(self.df)
 
     def results_df(self) -> DataFrame:
-        spark = self._base_df.sparkSession
+        """One row per evaluated check. Staged as an Arrow table, so the
+        frame is a LocalRelation: no Spark job, no Python worker."""
         rows = [
-            (self.name, c.rule_id, c.description, c.severity, c.n_ko, c.n_rows, c.flag_ko)
+            {"table": self.name, "rule_id": c.rule_id, "description": c.description,
+             "severity": c.severity, "n_ko": c.n_ko, "n_rows": c.n_rows,
+             "flag_ko": c.flag_ko}
             for c in self.check_list
         ]
-        return spark.createDataFrame(
-            rows,
-            "table string, rule_id string, description string, severity string,"
-            " n_ko long, n_rows long, flag_ko boolean",
+        return self._base_df.sparkSession.createDataFrame(
+            pa.Table.from_pylist(rows, schema=_RESULTS_SCHEMA)
         )
 
     # -- rollup predicates (reference table.py:173-190) ----------------------

@@ -499,3 +499,100 @@ def test_rollup_predicates_truth_table(spark):
     # over-cap on a fail check
     t.check_list = [mk("fail", 200, over=True)]
     assert t.over_n_max_rows_output() and t.over_n_max_rows_output(True)
+
+
+def _jobs_in_group(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by a fresh job group
+    after the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_jobs_and_lazy_metrics_plan(spark, sf_dir):
+    """QualityTable.run over row-local checks runs only the metrics
+    aggregate's jobs (its shuffle stage and the collect): the metrics are
+    one lazy Catalyst plan, not a collected row re-wrapped by
+    createDataFrame(list), whose extra job runs in Python workers. Building
+    the metrics frame runs no job, and its plan holds no LogicalRDD."""
+    import pandas as pd
+
+    from data_quality_spark.session import QualitySession
+
+    path = f"{sf_dir}/orders.parquet"
+    t = QualitySession(spark).table_from_parquet(
+        path, "orders", index_column="o_orderkey")
+    rules = (
+        t.check_index_not_null()
+        + t.check_values_in_list("o_orderstatus", ["F", "O"])
+        + t.check_columns_between_values(
+            "o_totalprice", min_value=0, max_value=300000)
+    )
+    eng = RuleEngine(rules)
+    m, n_jobs = _jobs_in_group(spark, lambda: eng.metrics(t.df))
+    assert n_jobs == 0
+    assert "LogicalRDD" not in m._jdf.queryExecution().analyzed().toString()
+    assert m.columns == ["rule_id", "description", "severity", "n_ko", "n_rows"]
+    empty = RuleEngine([]).metrics(t.df)
+    assert empty.schema == m.schema and empty.collect() == []
+
+    res, n_jobs = _jobs_in_group(spark, t.run)
+    assert 1 <= n_jobs <= 2  # the counter sees jobs, and only the aggregate's
+
+    pdf = pd.read_parquet(path)
+    price = pd.to_numeric(pdf["o_totalprice"])
+    want = {
+        rules[0].rule_id: int(pdf["o_orderkey"].isna().sum()),
+        rules[1].rule_id: int((~pdf["o_orderstatus"].isin(["F", "O"])
+                               & pdf["o_orderstatus"].notna()
+                               & (pdf["o_orderstatus"] != "")).sum()),
+        rules[2].rule_id: int(((price < 0) | (price > 300000)).sum()),
+    }
+    assert {r.rule_id: r.n_ko for r in res} == want
+    assert {r["rule_id"]: r["n_ko"] for r in m.collect()} == want
+    assert all(r.n_rows == len(pdf) for r in res)
+
+
+def test_results_df_matches_check_lists(spark, sf_dir):
+    """QualitySession.results_df is one row per (table, evaluated check),
+    equal to each table's check_list; tables without checks are skipped,
+    and with no check run at all it raises."""
+    from data_quality_spark.session import QualitySession
+
+    s = QualitySession(spark)
+    with pytest.raises(ValueError, match="no checks"):
+        s.results_df()
+    orders = s.table_from_parquet(f"{sf_dir}/orders.parquet", "orders",
+                                  index_column="o_orderkey")
+    orders.check_index_not_null()
+    orders.check_columns_between_values(
+        "o_totalprice", min_value=0, max_value=300000, flag_warning=True)
+    cust = s.table_from_parquet(f"{sf_dir}/customer.parquet", "customer",
+                                index_column="c_custkey")
+    cust.check_duplicate_index()
+    s.table_from_parquet(f"{sf_dir}/nation.parquet", "nation")  # never run
+    with pytest.raises(ValueError, match="no checks"):
+        s.results_df()
+    orders.run()
+    cust.run()
+
+    got = s.results_df()
+    assert got.schema.simpleString() == (
+        "struct<table:string,rule_id:string,description:string,"
+        "severity:string,n_ko:bigint,n_rows:bigint,flag_ko:boolean>")
+    assert "LogicalRDD" not in got._jdf.queryExecution().analyzed().toString()
+    want = sorted(
+        (t.name, c.rule_id, c.description, c.severity, c.n_ko, c.n_rows, c.flag_ko)
+        for t in (orders, cust) for c in t.check_list
+    )
+    assert len(want) == 3
+    assert sorted(tuple(r) for r in got.collect()) == want
