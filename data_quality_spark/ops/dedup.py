@@ -891,43 +891,6 @@ def minhash_incremental_matches(
     ).where(F.col("sig_jaccard") >= threshold)
 
 
-def dedup_minhash_incremental(
-    new_df: DataFrame,
-    index: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-    n: int = 3,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """Incremental NEAR-dedup of a new crawl batch: drop new rows matching
-    the historical signature index (minhash_incremental_matches), then
-    near-dedup the survivors in-batch (exact text Jaccard via
-    minhash_lsh_pairs, keep-lowest policy). The near-dup twin of
-    dedup_incremental — the daily-crawl shape where re-shingling the
-    historical corpus per batch would be O(corpus). The LSH/signature
-    params MUST match the ones the index was built with (passed through —
-    a k mismatch would silently zero-pad the component comparison and
-    skew every estimate)."""
-    matched = (
-        minhash_incremental_matches(
-            new_df, index, id_col, text_col, threshold, n,
-            k=k, bands=bands, rows=rows, max_bucket=max_bucket,
-        )
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
-    fresh = new_df.join(matched, id_col, "left_anti")
-    pairs = minhash_lsh_pairs(
-        fresh, id_col, text_col, threshold=threshold, n=n,
-        k=k, bands=bands, rows=rows,
-    )
-    return drop_near_dups(fresh, id_col, pairs)
-
-
 # ---------------------------------------------------------------------------
 # 3 — SimHash
 # ---------------------------------------------------------------------------

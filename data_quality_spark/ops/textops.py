@@ -389,8 +389,7 @@ def group_quota(
     `order_col` order (training-data use: cap any single host/domain's
     contribution to the corpus). Windowed rank per group — the partition key
     (host) has cardinality ≫ executors at web scale, so the window
-    parallelizes; the streaming twin with true arrival-order state is
-    streaming.host_quota_stream."""
+    parallelizes."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(group_col).orderBy(order_col)
@@ -1532,8 +1531,9 @@ def badwords_counts(
     words=BADWORDS_DEFAULT,
 ) -> DataFrame:
     """Per-document blocklist-word occurrences + flag — the audit/metrics
-    twin of the C4 bad-words gate (corpora report what the gate WOULD drop
-    before flipping it on). ONE regexp scan per row, map-only, pure
+    twin of the C4 bad-words gate, which the pipeline runs as its
+    `badwords_found` rule when QFConfig.badwords is set (corpora report
+    what the gate WOULD drop before flipping it on). ONE regexp scan per row, map-only, pure
     codegen; a ~400-word production list compiles into the same single
     alternation. NULL-text docs produce no row (pii_counts convention)."""
     pat = _badwords_pattern(words)
@@ -1546,20 +1546,6 @@ def badwords_counts(
         .select(F.col(id_col), n.alias("n_badwords"))
         .withColumn("has_badwords", F.col("n_badwords") > 0)
     )
-
-
-def badwords_drop(
-    df: DataFrame,
-    text_col: str,
-    words=BADWORDS_DEFAULT,
-) -> DataFrame:
-    """The gate itself: KEEP documents containing no blocklist word (C4
-    drops the whole page on any hit). NULL text passes — emptiness is the
-    heuristic stage's verdict, not this one's. Map-only rlike; the filter
-    pushes to the scan when this is the first stage after the read."""
-    pat = _badwords_pattern(words)
-    t = F.col(text_col)
-    return df.where(t.isNull() | ~t.rlike(pat))
 
 
 # ---------------------------------------------------------------------------

@@ -216,9 +216,9 @@ def _build_quality_rules(cfg: QFConfig, pii_col: str | None) -> list[Rule]:
                      url_spam_score_col(F.col("url"), dict(cfg.spam_fragments))
                      >= F.lit(cfg.spam_threshold))))
     if cfg.host_rank_path:
-        # reads the host_rank column with_host_rank joined in (both the
-        # batch and streaming annotate paths add it whenever the path is
-        # configured); NULL rank (host not in the artifact) never fires
+        # reads the host_rank column with_host_rank joined in (annotate_pages
+        # adds it whenever the path is configured); NULL rank (host not in
+        # the artifact) never fires
         R.append(
             Rule("host_low_rank",
                  f"crawl host rank < {cfg.min_host_rank}",
@@ -240,8 +240,8 @@ def _build_quality_rules(cfg: QFConfig, pii_col: str | None) -> list[Rule]:
                  f"classifier quality score < {cfg.clf_threshold}",
                  fired(F.col("clf_score") < cfg.clf_threshold)))
     if cfg.drop_noindex:
-        # reads the noindex_found column both annotate paths compute from
-        # the raw html BEFORE the payload drop (rules run after it)
+        # reads the noindex_found column annotate_pages computes from the
+        # raw html BEFORE the payload drop (rules run after it)
         R.append(
             Rule("meta_noindex",
                  "page carries a robots noindex directive",
@@ -260,9 +260,7 @@ def _build_quality_rules(cfg: QFConfig, pii_col: str | None) -> list[Rule]:
 def with_model_scores(df: DataFrame, cfg: QFConfig = DEFAULT_CONFIG) -> DataFrame:
     """ONE fused Arrow stage for ALL models (langid + perplexity + the
     optional classifier when cfg.clf_weights_path is set): the text column
-    crosses JVM→Python once. Streaming-safe (per-row, stateless) — shared
-    by annotate_pages and streaming.annotate_stream so batch and stream
-    score identically. With the classifier on, the sigmoid + threshold
+    crosses JVM→Python once. With the classifier on, the sigmoid + threshold
     stay JVM-side (identical float semantics to the corpus-stage
     textops.classifier_score)."""
     clf = None
@@ -352,8 +350,7 @@ def with_host_rank(
     turns out small, and otherwise shuffles — a slow plan instead of a
     driver/executor OOM abort. broadcast=True forces the hint (caller
     asserts the table fits the heaps: the pages side must NEVER shuffle
-    for a lookup); False never hints — pre-bucket both sides instead.
-    Stream-safe either way (stream-static join)."""
+    for a lookup); False never hints — pre-bucket both sides instead."""
     from data_quality_spark.ops.textops import host_of
 
     spark = df.sparkSession
@@ -385,36 +382,29 @@ def with_host_rank(
     )
 
 
-def annotate_pages(
-    df: DataFrame, cfg: QFConfig = DEFAULT_CONFIG, min_parallelism: int | None = 0
-) -> DataFrame:
+def annotate_pages(df: DataFrame, cfg: QFConfig = DEFAULT_CONFIG) -> DataFrame:
     """Full per-row annotation: extraction, features, model scores, rules,
     scrubbed text, keep flag, lineage columns.
 
-    min_parallelism: repartition by url-hash when the input has fewer
-    partitions (local parquet fixtures arrive as a handful of splits; the
-    UDF/feature stages would serialize). 0/None = auto (2× default
-    parallelism); pass -1 to disable. On a real cluster the file splits
-    already provide parallelism and the url-hash salting also breaks up
-    pathological host clustering in the input order.
+    An input with fewer partitions than the default parallelism (local
+    parquet fixtures arrive as a handful of splits; the UDF/feature stages
+    would serialize) is repartitioned by url-hash to 2× default
+    parallelism. On a real cluster the file splits already provide
+    parallelism; the url-hash also breaks up pathological host clustering
+    in the input order.
     """
-    if min_parallelism is None:
-        min_parallelism = 0  # documented: None means auto, same as 0
     # lineage: capture the source split BEFORE any exchange (input_file_name
     # is empty once rows cross a shuffle) — north_rule's per-partition
     # lineage: every output row is traceable to (src_file, part_id).
     if "src_file" not in df.columns:
         df = df.withColumn("src_file", F.input_file_name())
-    if min_parallelism is not None and min_parallelism >= 0:
-        target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
-        from data_quality_spark.ops.util import num_partitions
+    target = df.sparkSession.sparkContext.defaultParallelism
+    from data_quality_spark.ops.util import num_partitions
 
-        if num_partitions(df) < target:
-            # spread narrow inputs across the cluster; the url-hash also
-            # breaks up pathological host clustering. When the input already
-            # has >= cores splits this exchange is pure overhead (it would
-            # move the full html payload) — skip it.
-            df = df.repartition(2 * target, F.xxhash64("url"))
+    if num_partitions(df) < target:
+        # when the input already has >= cores splits this exchange is pure
+        # overhead (it would move the full html payload) — skip it.
+        df = df.repartition(2 * target, F.xxhash64("url"))
     # dup-url keys from the raw input: a column-pruned url-only scan +
     # count>1 aggregate, broadcast-joined back (AQE) — the wide frame and
     # the expensive downstream stages are never re-evaluated for this.
@@ -426,18 +416,6 @@ def annotate_pages(
         .select("url", F.lit(True).alias("__aux_dup_url"))
     )
     df = df.join(dup_keys, on="url", how="left")
-    return annotate_rowwise(df, cfg, quality_rules(cfg, pii_col="pii_found"))
-
-
-def annotate_rowwise(df: DataFrame, cfg: QFConfig, rules) -> DataFrame:
-    """The per-row stage chain SHARED by batch (annotate_pages) and
-    streaming (annotate_stream) — ONE definition, so a stage added here
-    reaches both planes and batch/stream keep-drop parity is structural
-    rather than a parallel-edit discipline. Everything in the chain is
-    per-row / stream-safe (the host-rank join is stream-static); the
-    cross-row pieces (dup-url keys, repartition, src_file capture) remain
-    caller concerns, as does the rule list (streaming drops the
-    cross-row duplicate_url rule)."""
     if cfg.host_rank_path:
         df = with_host_rank(df, cfg)
     # staged extraction: ONE full-document regex per row (extract.py perf
@@ -458,13 +436,13 @@ def annotate_rowwise(df: DataFrame, cfg: QFConfig, rules) -> DataFrame:
     df = with_model_scores(df, cfg)
     df = df.withColumn("ppl_bucket", tail["ppl_bucket"])
     df = df.withColumn("pii_found", tail["pii_found"])
-    df = RuleEngine(rules).annotate(df)
+    df = RuleEngine(quality_rules(cfg, pii_col="pii_found")).annotate(df)
     df = df.withColumn("text_scrubbed", tail["text_scrubbed"])
     return df.withColumn("part_id", tail["part_id"])
 
 
 def _tail_cols(ppl_head: float, ppl_tail: float) -> dict:
-    """The per-row columns annotate_rowwise adds around the model and rule
+    """The per-row columns annotate_pages adds around the model and rule
     stages — built once per JVM per perplexity cut pair (colmemo)."""
     return {
         # robots-noindex detector over the raw html (drop_noindex only)

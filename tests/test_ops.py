@@ -1946,9 +1946,6 @@ def test_dedup_minhash_incremental(spark):
     )
     matches = D.minhash_incremental_matches(new, index, "doc_id", "text")
     assert {(r["new_id"], r["seen_id"]) for r in matches.collect()} == {(10, 1)}
-    kept = {r["doc_id"] for r in
-            D.dedup_minhash_incremental(new, index, "doc_id", "text").collect()}
-    assert kept == {11, 13}                      # 10 drops vs index, 12 in-batch
 
 
 def test_mix_rates_and_resample(spark):
@@ -2181,11 +2178,9 @@ def test_new_ops_identity_edges(spark):
     empty = spark.createDataFrame([], "doc_id int, text string")
     kept = T.decontaminate(docs, empty, "doc_id", "text")
     assert kept.count() == 3
-    # cross-batch near-dedup vs an EMPTY index: no matches, and the drop
-    # wrapper reduces to plain in-batch near-dedup (all distinct here)
+    # cross-batch near-dedup vs an EMPTY index: no matches
     idx = D.minhash_signature_index(empty, "doc_id", "text")
     assert D.minhash_incremental_matches(docs, idx, "doc_id", "text").count() == 0
-    assert D.dedup_minhash_incremental(docs, idx, "doc_id", "text").count() == 3
     # span removal on a corpus with no repeated spans is a byte-level no-op
     out = {r["doc_id"]: r for r in
            D.remove_dup_spans(docs, "doc_id", "text").collect()}
@@ -2271,9 +2266,9 @@ def test_dup_group_sizes(spark):
 
 
 def test_badwords_gate(spark):
-    """C4 bad-words gate: word-boundary hits (no substring matches),
-    case-insensitive, NULL text passes the drop but yields no audit row,
-    and non-contract word lists are rejected."""
+    """C4 bad-words audit: word-boundary hits (no substring matches),
+    case-insensitive, NULL text yields no audit row, and non-contract word
+    lists are rejected."""
     import pytest
 
     from data_quality_spark.ops import textops as T
@@ -2295,13 +2290,10 @@ def test_badwords_gate(spark):
     assert audit[5]["n_badwords"] == 1
     assert 4 not in audit  # NULL text: no audit row
 
-    kept = {r["doc_id"] for r in T.badwords_drop(df, "text").collect()}
-    assert kept == {2, 3, 4}  # NULL passes the gate
-
     with pytest.raises(ValueError, match="empty"):
-        T.badwords_drop(df, "text", words=[])
+        T.badwords_counts(df, "doc_id", "text", words=[])
     with pytest.raises(ValueError, match="ASCII"):
-        T.badwords_drop(df, "text", words=["two words"])
+        T.badwords_counts(df, "doc_id", "text", words=["two words"])
 
 
 def test_read_warc_cdx_ranged(spark, tmp_path):

@@ -5,6 +5,7 @@ byte-identical scrubbed text per url, fault classes caught, resume works.
 
 import json
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -972,7 +973,7 @@ def test_meta_noindex_rule(spark):
         "url string, html binary, warc_ts timestamp, text string, lang string",
     )
     got = {r["url"]: r for r in
-           annotate_pages(df, cfg, min_parallelism=-1)
+           annotate_pages(df, cfg)
            .select("url", "noindex_found", "fired_rules", "keep").collect()}
     fired = {u for u, r in got.items() if "meta_noindex" in r["fired_rules"]}
     assert fired == {"https://a.example/1", "https://a.example/2"}
@@ -988,8 +989,48 @@ def test_meta_noindex_rule(spark):
     for u, r in got.items():
         assert list(r["fired_rules"]) == exp[u], u
     # default config: stage off, column absent
-    base = annotate_pages(df, min_parallelism=-1)
+    base = annotate_pages(df)
     assert "noindex_found" not in base.columns
+
+
+def _pages_range(spark, n_parts):
+    """8 pages over `n_parts` range slices: an input with a known partition
+    count and no exchange of its own."""
+    return spark.range(0, 8, 1, n_parts).select(
+        F.concat(F.lit("https://a.example/"), F.col("id").cast("string"))
+        .alias("url"),
+        F.lit(b"<main><p>plain text</p></main>").alias("html"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit("plain text").alias("text"),
+        F.lit("en").alias("lang"),
+    )
+
+
+def _exchanges(df):
+    """(partitioning, its arguments, shuffle origin) of every shuffle
+    Exchange in df's physical plan, read from the unexecuted adaptive
+    plan: building it runs no job."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"(?<!Broadcast)Exchange (\w+)\((.*)\), (\w+), \[plan_id",
+                      plan)
+
+
+def test_annotate_spreads_narrow_input_by_url_hash(spark):
+    """A 1-partition input is repartitioned by url-hash to 2x default
+    parallelism before the dup-url aggregate; an input that already has
+    default-parallelism partitions is not."""
+    dp = spark.sparkContext.defaultParallelism
+    narrow = _exchanges(annotate_pages(_pages_range(spark, 1)))
+    spread = [e for e in narrow if e[2] == "REPARTITION_BY_NUM"]
+    assert spread, narrow
+    for kind, args, _ in spread:
+        assert kind == "hashpartitioning"
+        assert re.fullmatch(rf"xxhash64\(url#\d+, 42\), {2 * dp}", args), args
+    wide = _exchanges(annotate_pages(_pages_range(spark, dp)))
+    # only the dup-url aggregate's own exchange on url remains
+    assert wide and all(
+        e[2] == "ENSURE_REQUIREMENTS" and e[1].startswith("url#") for e in wide
+    ), wide
 
 
 def test_resume_pins_n_buckets(spark, fixture_path, tmp_path):
