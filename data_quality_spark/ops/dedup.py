@@ -702,7 +702,6 @@ def minhash_lsh_pairs(
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
-    broadcast_candidates: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
 
@@ -713,13 +712,12 @@ def minhash_lsh_pairs(
     inside the Arrow verify stage]. The band exchange payload is one string
     key + the id.
 
-    broadcast_candidates: None (default) adds NO broadcast hint — AQE
-    converts the verify joins to broadcast at runtime exactly when the
-    candidate set measures small. The pair count is data-dependent and
-    unbounded (a high-duplication corpus yields O(corpus) pairs, up to
-    ~C(MAX_BUCKET,2) per bucket), and a forced hint would bypass
-    autoBroadcastJoinThreshold and OOM the driver at the 100 TB design
-    point. Pass True only when the caller KNOWS the pair set is tiny."""
+    The verify joins carry NO broadcast hint — AQE converts them to
+    broadcast at runtime exactly when the candidate set measures small.
+    The pair count is data-dependent and unbounded (a high-duplication
+    corpus yields O(corpus) pairs, up to ~C(MAX_BUCKET,2) per bucket), and
+    a forced hint would bypass autoBroadcastJoinThreshold and OOM the
+    driver at the 100 TB design point."""
     base = (
         with_minhash(df.select(id_col, text_col), text_col, n, k)
         .where(F.size("shingles") > 0)
@@ -742,8 +740,6 @@ def minhash_lsh_pairs(
     txt = df.select(id_col, text_col)
     ta = txt.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta"))
     tb = txt.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb"))
-    if broadcast_candidates:
-        cand = F.broadcast(cand)
     paired = ta.join(cand, "id_a").join(tb, "id_b")
     return paired.select(
         "id_a",

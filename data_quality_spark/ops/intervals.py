@@ -55,7 +55,6 @@ def overlapping_periods_global(
     extremes_exclude: bool = False,
     num_partitions: int | None = None,
     state: dict | None = None,
-    state_path: str | None = None,
 ) -> DataFrame:
     """Rows participating in a global period overlap (KO rows): a row is KO
     if it overlaps its predecessor in the (start, end, tiebreak) total
@@ -66,7 +65,7 @@ def overlapping_periods_global(
     flagged = overlap_flags_global(
         df, start_col, end_col, tiebreak_cols, extremes_exclude,
         num_partitions, flag_col="__overlap_ko",
-        state=state, state_path=state_path,
+        state=state,
     )
     return flagged.where(F.col("__overlap_ko")).drop("__overlap_ko")
 
@@ -128,9 +127,7 @@ def compute_overlap_state(
     """Run the slim sampling job(s) ONCE and return the reusable plan state:
     literal range boundaries + the per-pid stitch table (first/last key rows
     and counts).  Repeat calls on the same input can pass this back via
-    ``overlap_flags_global(state=...)`` (or persist it with
-    ``save_overlap_state`` and pass ``state_path=``, the same reuse shape as
-    ``ivf_topk(centroids_path=...)``) and skip the sampling job entirely —
+    ``overlap_flags_global(state=...)`` and skip the sampling job entirely —
     the flag pass is then the only job that touches the table."""
     tiebreak_cols = tiebreak_cols or []
     sort_cols = [start_col, end_col, *tiebreak_cols]
@@ -188,70 +185,6 @@ def compute_overlap_state(
     }
 
 
-def _encode_state_value(v):
-    import datetime as _dt
-
-    # DateType columns arrive from Arrow as datetime.date — tag them
-    # distinctly: decoding a date as pd.Timestamp used to make the patch
-    # pass compare Timestamp vs date and raise TypeError in every task on
-    # persisted-state reuse (fresh-state runs were unaffected)
-    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-        return {"__d__": v.isoformat()}
-    if hasattr(v, "isoformat"):  # datetime / pd.Timestamp
-        return {"__dt__": v.isoformat()}
-    return v
-
-
-def _decode_state_value(v):
-    import datetime as _dt
-
-    if isinstance(v, dict) and "__d__" in v:
-        return _dt.date.fromisoformat(v["__d__"])
-    if isinstance(v, dict) and "__dt__" in v:
-        return pd.Timestamp(v["__dt__"])
-    return v
-
-
-def save_overlap_state(state: dict, path: str) -> None:
-    """Persist an overlap plan state as JSON (timestamps ISO-tagged)."""
-    import json
-
-    def enc(d: dict) -> dict:
-        return {k: _encode_state_value(v) for k, v in d.items()}
-
-    doc = {
-        "sort_cols": state["sort_cols"],
-        "boundaries": [enc(b) for b in state["boundaries"]],
-        "info": {
-            str(p): {"first": enc(r["first"]), "last": enc(r["last"]),
-                     "n": r["n"]}
-            for p, r in state["info"].items()
-        },
-    }
-    with open(path, "w") as fh:
-        json.dump(doc, fh)
-
-
-def load_overlap_state(path: str) -> dict:
-    import json
-
-    with open(path) as fh:
-        doc = json.load(fh)
-
-    def dec(d: dict) -> dict:
-        return {k: _decode_state_value(v) for k, v in d.items()}
-
-    return {
-        "sort_cols": doc["sort_cols"],
-        "boundaries": [dec(b) for b in doc["boundaries"]],
-        "info": {
-            int(p): {"first": dec(r["first"]), "last": dec(r["last"]),
-                     "n": r["n"]}
-            for p, r in doc["info"].items()
-        },
-    }
-
-
 def overlap_flags_global(
     df: DataFrame,
     start_col: str,
@@ -262,7 +195,6 @@ def overlap_flags_global(
     flag_col: str = "__overlap_ko",
     shuffle_partitions: int | None = None,
     state: dict | None = None,
-    state_path: str | None = None,
 ) -> DataFrame:
     """Same computation, but ANNOTATES every row with a boolean `flag_col`
     instead of filtering — the shape the Rule engine needs (a rule's
@@ -278,9 +210,7 @@ def overlap_flags_global(
     second slim stitch job run. The wide frame itself is traversed once, by
     the final flag pass — no checkpoint/cache/materialization anywhere.
     Repeat callers skip even the slim job by passing ``state=`` (from
-    ``compute_overlap_state``) or ``state_path=`` (a JSON file previously
-    written by ``save_overlap_state``; if the file does not exist yet, the
-    freshly computed state is saved there for the next caller).
+    ``compute_overlap_state``).
 
     STALE-STATE GUARD: reused state carries each range partition's recorded
     row count (__n); the flag pass counts the rows it actually sees per pid
@@ -293,16 +223,10 @@ def overlap_flags_global(
     tiebreak_cols = tiebreak_cols or []
     sort_cols = [start_col, end_col, *tiebreak_cols]
 
-    import os
-
-    if state is None and state_path is not None and os.path.exists(state_path):
-        state = load_overlap_state(state_path)
     if state is None:
         state = compute_overlap_state(
             df, start_col, end_col, tiebreak_cols, num_partitions
         )
-        if state_path is not None:
-            save_overlap_state(state, state_path)
     if state["sort_cols"] != sort_cols:
         raise ValueError(
             f"overlap state was computed for sort columns "

@@ -314,9 +314,7 @@ def _fake_decode(payload: bytes, fmt: str) -> tuple[int, int]:
     return 64 + d[0] % 192, 64 + d[1] % 192
 
 
-def decode_media_meta(
-    df: DataFrame, real_decode: bool = False, batch_hint: int | None = None
-) -> DataFrame:
+def decode_media_meta(df: DataFrame, real_decode: bool = False) -> DataFrame:
     """mapInPandas stage: binary payload → typed metadata row per media.
 
     ``real_decode=True`` parses genuine container headers (PNG IHDR, JPEG

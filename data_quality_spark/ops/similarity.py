@@ -658,7 +658,6 @@ def cosine_lsh_pairs(
     vec_col: str,
     threshold: float = 0.95,
     tables: list[list[list[float]]] | None = None,
-    broadcast_candidates: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by random-hyperplane LSH — the no-blocking-key
     scale path (cosine_pairs needs caller-provided blocks). Candidates =
@@ -666,11 +665,11 @@ def cosine_lsh_pairs(
     verified exactly (cosine ≥ threshold). Same candidate topology as the
     MinHash banding: bucket aggregation, no self-join, bucket-size cap —
     and id-only: the band exchange carries (band_key, id), never the
-    vector; verification joins the vectors back. broadcast_candidates as in
-    ops.dedup.minhash_lsh_pairs: default None adds NO hint — the pair count
-    is data-dependent and unbounded, so AQE decides broadcast at runtime
-    from the measured size instead of a forced hint that could OOM the
-    driver on a high-duplication corpus."""
+    vector; verification joins the vectors back. As in
+    ops.dedup.minhash_lsh_pairs the verify joins carry NO hint — the pair
+    count is data-dependent and unbounded, so AQE decides broadcast at
+    runtime from the measured size instead of a forced hint that could OOM
+    the driver on a high-duplication corpus."""
     from data_quality_spark.ops.dedup import _pairs_from_buckets
 
     tables = tables if tables is not None else PAIR_HYPERPLANES
@@ -693,8 +692,6 @@ def cosine_lsh_pairs(
     vecs = df.select(F.col(id_col), v.alias("__v"))
     va = vecs.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"))
     vb = vecs.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"))
-    if broadcast_candidates:
-        cand = F.broadcast(cand)
     paired = va.join(cand, "id_a").join(vb, "id_b")
     return paired.select(
         "id_a",

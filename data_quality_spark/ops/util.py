@@ -5,9 +5,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_narrow(df: DataFrame, factor: int = 2) -> DataFrame:
-    """Repartition a NARROW local input (1-2 parquet splits) so a following
-    Arrow UDF stage parallelizes instead of serializing on one task. At
+def spread_narrow(df: DataFrame) -> DataFrame:
+    """Repartition a NARROW local input (1-2 parquet splits) into twice
+    defaultParallelism partitions so a following Arrow UDF stage
+    parallelizes instead of serializing on one task. At
     scale the file splits already provide parallelism and this is a no-op
     (condition: existing partitions < defaultParallelism). Round-robin —
     callers needing a specific key distribution repartition themselves.
@@ -18,7 +19,7 @@ def spread_narrow(df: DataFrame, factor: int = 2) -> DataFrame:
     once (the probe never executes a job — planning only)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if num_partitions(df) < target:
-        return df.repartition(factor * target)
+        return df.repartition(2 * target)
     return df
 
 

@@ -11,7 +11,7 @@ engine's replacement of the reference's per-check scans, check.py:84-126):
              → rules (RuleEngine: fired array, keep flag)
              → scrub (native regexp_replace chain)
              → outputs: kept table, per-rule × per-partition metrics
-               (lineage), capped KO sample
+               (lineage)
 
 Scale design:
   * no Python in the row path except the two model UDFs (Arrow-batched)
@@ -57,7 +57,6 @@ class QFConfig:
     min_stopword_density: float = 0.10
     max_perplexity: float = 26.0
     drop_lang_mismatch: bool = True
-    n_sample_rows: int = 100
     # CCNet-style perplexity terciles: head (cleanest) / middle / tail;
     # annotation-only — downstream training picks buckets, the filter
     # doesn't drop on them
@@ -337,20 +336,17 @@ def _model_cols(clf) -> tuple:
 HOST_RANK_BROADCAST_MAX_BYTES = 256 << 20
 
 
-def with_host_rank(
-    df: DataFrame, cfg: QFConfig, broadcast: bool | str = "auto"
-) -> DataFrame:
+def with_host_rank(df: DataFrame, cfg: QFConfig) -> DataFrame:
     """Join the persisted crawl-rank prior (ops.graph.host_rank artifact)
     onto the pages frame as a `host_rank` column (NULL = host unknown).
 
-    broadcast='auto' (default) probes the artifact's on-disk footprint
-    (fsio.content_length — one metadata RPC) and adds the broadcast hint
-    only under HOST_RANK_BROADCAST_MAX_BYTES; above it the plan is left to
-    AQE, which still broadcast-converts at runtime if the scanned relation
-    turns out small, and otherwise shuffles — a slow plan instead of a
-    driver/executor OOM abort. broadcast=True forces the hint (caller
-    asserts the table fits the heaps: the pages side must NEVER shuffle
-    for a lookup); False never hints — pre-bucket both sides instead."""
+    Probes the artifact's on-disk footprint (fsio.content_length — one
+    metadata RPC) and adds the broadcast hint only under
+    HOST_RANK_BROADCAST_MAX_BYTES, so the pages side never shuffles for a
+    lookup; above it the plan is left to AQE, which still
+    broadcast-converts at runtime if the scanned relation turns out small,
+    and otherwise shuffles — a slow plan instead of a driver/executor OOM
+    abort."""
     from data_quality_spark.ops.textops import host_of
 
     spark = df.sparkSession
@@ -358,23 +354,19 @@ def with_host_rank(
         spark.read.parquet(cfg.host_rank_path)
         .select(F.col("host").alias("__hr_host"), F.col("rank").alias("host_rank"))
     )
-    if broadcast == "auto":
-        nbytes = fsio.content_length(spark, cfg.host_rank_path)
-        broadcast = nbytes <= HOST_RANK_BROADCAST_MAX_BYTES
-        if not broadcast:
-            import warnings
-
-            warnings.warn(
-                f"host-rank artifact at {cfg.host_rank_path} is "
-                f"{nbytes >> 20} MiB on disk — above the "
-                f"{HOST_RANK_BROADCAST_MAX_BYTES >> 20} MiB auto-broadcast "
-                "ceiling; leaving the join strategy to AQE. Pass "
-                "broadcast=True to force the hint if your executors are "
-                "sized for it.",
-                stacklevel=2,
-            )
-    if broadcast:
+    nbytes = fsio.content_length(spark, cfg.host_rank_path)
+    if nbytes <= HOST_RANK_BROADCAST_MAX_BYTES:
         ranks = F.broadcast(ranks)
+    else:
+        import warnings
+
+        warnings.warn(
+            f"host-rank artifact at {cfg.host_rank_path} is "
+            f"{nbytes >> 20} MiB on disk — above the "
+            f"{HOST_RANK_BROADCAST_MAX_BYTES >> 20} MiB auto-broadcast "
+            "ceiling; leaving the join strategy to AQE.",
+            stacklevel=2,
+        )
     return (
         df.withColumn("__hr_host", host_of(F.col("url")))
         .join(ranks, "__hr_host", "left")

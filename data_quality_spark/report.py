@@ -28,15 +28,11 @@ from pyspark.sql import functions as F
 def _ko_rows_pdf(table, max_rows: int):
     ann = table.annotate()
     ko = ann.where(F.size("fired_rules") > 0)
-    drop = [c for c in (table.output_columns or []) if c] or None
-    if drop:
-        cols = drop + ["fired_descriptions", "flag_only_warning"]
+    keep = [c for c in (table.output_columns or []) if c]
+    if keep:
+        cols = keep + ["fired_descriptions", "flag_only_warning"]
     else:
-        cols = [
-            c
-            for c in ko.columns
-            if c not in ("fired_rules", "keep")
-        ]
+        cols = [c for c in ko.columns if c not in ("fired_rules", "keep")]
     return ko.select(*cols).limit(max_rows).toPandas()
 
 

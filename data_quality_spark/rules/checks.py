@@ -392,8 +392,7 @@ def custom_condition(condition: str | Column, **kw) -> Rule:
 # #12 — match dimension table (match_dimension_table.py): FK with no PK match.
 #       The reference picks 1 of 4 strategies by operand *location*
 #       (:38-47, :68-89, :175-207, :209-227); Spark subsumes all with a
-#       broadcast LEFT join on the string-cast composite key — AQE/broadcast
-#       threshold picks hash vs sort-merge at scale.
+#       broadcast LEFT join on the string-cast composite key.
 # ---------------------------------------------------------------------------
 
 
@@ -401,17 +400,14 @@ def match_dimension(
     dim_df: DataFrame,
     fk_cols: list[str] | str,
     pk_cols: list[str] | str | None = None,
-    broadcast_dim: bool = True,
     **kw,
 ) -> Rule:
     """Left join of the fact on the dim's distinct composite keys.
 
-    broadcast_dim=True forces the dim as the hash-join build side —
-    correct for the reference's lookup-table dims and for any dim that
-    fits executor memory, and it guarantees the 100 TB fact side never
-    shuffles. It BYPASSES autoBroadcastJoinThreshold: for a genuinely
-    large dim (multi-GB after key projection) pass False and let AQE pick
-    hash vs sort-merge from measured sizes."""
+    The dim is always broadcast as the hash-join build side — correct for
+    the reference's lookup-table dims and for any dim that fits executor
+    memory, and it guarantees the 100 TB fact side never shuffles. It
+    BYPASSES autoBroadcastJoinThreshold."""
     fk_cols = [fk_cols] if isinstance(fk_cols, str) else list(fk_cols)
     pk_cols = fk_cols if pk_cols is None else (
         [pk_cols] if isinstance(pk_cols, str) else list(pk_cols)
@@ -424,14 +420,12 @@ def match_dimension(
     keycol = f"__dim_key_{rule_id}"
 
     def prepare(df: DataFrame) -> DataFrame:
-        keys = (
+        keys = F.broadcast(
             dim_df.select(composite_key(pk_cols, dim_df.schema).alias(keycol))
             .where(F.col(keycol).isNotNull())
             .distinct()
             .withColumn(marker, F.lit(1))
         )
-        if broadcast_dim:
-            keys = F.broadcast(keys)
         return df.join(
             keys, composite_key(fk_cols, df.schema) == F.col(keycol), "left"
         ).drop(keycol)
@@ -475,7 +469,6 @@ def _order_vs_dimension(
     rule_id: str,
     description: str,
     cast_fn_right=None,
-    broadcast_dim: bool = True,
     **kw,
 ) -> Rule:
     # composite FKs: the join key is the float-normalized composite string
@@ -492,12 +485,10 @@ def _order_vs_dimension(
     right_int = f"__aux_dimo_{rule_id}"
 
     def prepare(df: DataFrame) -> DataFrame:
-        dim = dim_df.select(
+        dim = F.broadcast(dim_df.select(
             composite_key(pks, dim_df.schema).alias(keycol),
             F.col(right_col).alias(right_int),
-        ).where(F.col(keycol).isNotNull()).dropDuplicates([keycol])
-        if broadcast_dim:
-            dim = F.broadcast(dim)
+        ).where(F.col(keycol).isNotNull()).dropDuplicates([keycol]))
         joined = df.join(
             dim, composite_key(fks, df.schema) == F.col(keycol), "left"
         ).drop(keycol)

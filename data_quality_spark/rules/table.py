@@ -8,8 +8,7 @@ as in table.py:364-373).
 Execution model difference, by design: ``check_*`` methods ACCUMULATE rules;
 ``run()`` evaluates every accumulated rule in ONE scan (RuleEngine), then
 fills per-check results (n_ko, flag_ko, capped ko_rows, flag_over_max_rows —
-reference check.py:25-29). ``eager=True`` (default False) gives the
-reference's one-scan-per-check behaviour for API compatibility.
+reference check.py:25-29).
 """
 
 from __future__ import annotations
@@ -133,61 +132,66 @@ class QualityTable:
         f = self.datetime_columns[col]
         return None if f == self._FMT_UNKNOWN else f
 
-    def _add(self, rules: list[Rule], eager: bool, **common) -> list[Rule]:
-        ignore = common.get("ignore_filters") or []
+    def _add(
+        self, rules: list[Rule], ignore_filters=None, flag_warning: bool = False,
+        n_max_rows_output: int | None = None,
+    ) -> list[Rule]:
+        # the per-check options every check_* method forwards; any other
+        # keyword (a typo such as flag_warnings=) raises TypeError here
+        ignore = ignore_filters or []
         if isinstance(ignore, str):
             ignore = [ignore]
+        if n_max_rows_output is None:
+            n_max_rows_output = self.n_max_rows_output
         for r in rules:
-            if common.get("flag_warning"):
+            if flag_warning:
                 r.severity = "warning"
             if self.output_columns and r.output_columns is None:
                 r.output_columns = self.output_columns
-            r.max_rows = common.get("n_max_rows_output", self.n_max_rows_output)
+            r.max_rows = n_max_rows_output
             # rows matching ANY ignore filter are excluded from checking
             # (reference check.py:71-82: per-check WHERE fragments ANDed in
             # negated into the KO filter)
             for f in ignore:
                 r.violation = r.violation & ~F.expr(self._clean_filter(f))
             self.rules.append(r)
-        if eager:
-            self.run(only=[r.rule_id for r in rules])
         return rules
 
     # -- check_* API (reference table.py entry points) ----------------------
-    def check_index_not_null(self, eager=False, **kw):  # table.py:281-302
+    def check_index_not_null(self, **kw):  # table.py:281-302
         col = self.index_column
         if col is None:
             raise ValueError("index_column not set")
-        return self._add([C.index_not_null(col)], eager, **kw)
+        return self._add([C.index_not_null(col)], **kw)
 
-    def check_duplicate_index(self, eager=False, **kw):  # table.py:305-326
+    def check_duplicate_index(self, **kw):  # table.py:305-326
         col = self.index_column
         if col is None:
             raise ValueError("index_column not set")
         return self._add(
-            [C.duplicate_values(col, rule_id=f"duplicate_index__{col}")], eager, **kw
+            [C.duplicate_values(col, rule_id=f"duplicate_index__{col}")], **kw
         )
 
-    def check_duplicate_values(self, columns, eager=False, **kw):  # table.py:378-399
+    def check_duplicate_values(self, columns, **kw):  # table.py:378-399
         cols = [columns] if isinstance(columns, str) else columns
-        return self._add([C.duplicate_values(c) for c in cols], eager, **kw)
+        return self._add([C.duplicate_values(c) for c in cols], **kw)
 
-    def check_not_empthy_column(self, columns, eager=False, **kw):  # table.py:329-375
+    def check_not_empthy_column(self, columns, **kw):  # table.py:329-375
         cols = [columns] if isinstance(columns, str) else columns
-        return self._add([C.not_empty_column(c) for c in cols], eager, **kw)
+        return self._add([C.not_empty_column(c) for c in cols], **kw)
 
     # keep the reference's typo'd name as an alias, plus a sane name
     check_not_empty_column = check_not_empthy_column
 
-    def check_datetime_format(self, columns, fmt=None, eager=False, **kw):  # :402-428
+    def check_datetime_format(self, columns, fmt=None, **kw):  # :402-428
         cols = [columns] if isinstance(columns, str) else columns
         return self._add(
-            [C.datetime_format(c, fmt or self._fmt(c)) for c in cols], eager, **kw
+            [C.datetime_format(c, fmt or self._fmt(c)) for c in cols], **kw
         )
 
     def check_columns_between_values(
         self, columns, min_value=None, max_value=None,
-        min_included=True, max_included=True, eager=False, **kw,
+        min_included=True, max_included=True, **kw,
     ):  # table.py:439-482
         cols = [columns] if isinstance(columns, str) else columns
         return self._add(
@@ -195,12 +199,12 @@ class QualityTable:
                 C.between_values(c, min_value, max_value, min_included, max_included)
                 for c in cols
             ],
-            eager, **kw,
+            **kw,
         )
 
     def check_columns_between_dates(
         self, columns, min_date=None, max_date=None, fmt=None,
-        min_included=True, max_included=True, eager=False, **kw,
+        min_included=True, max_included=True, **kw,
     ):  # table.py:485-529
         cols = [columns] if isinstance(columns, str) else columns
         return self._add(
@@ -210,33 +214,33 @@ class QualityTable:
                 )
                 for c in cols
             ],
-            eager, **kw,
+            **kw,
         )
 
-    def check_date_column_not_in_future(self, columns, fmt=None, eager=False, **kw):
+    def check_date_column_not_in_future(self, columns, fmt=None, **kw):
         cols = [columns] if isinstance(columns, str) else columns  # table.py:531-551
         return self._add(
-            [C.date_not_in_future(c, fmt or self._fmt(c)) for c in cols], eager, **kw
+            [C.date_not_in_future(c, fmt or self._fmt(c)) for c in cols], **kw
         )
 
-    def check_dates_order(self, columns, strictly_ascending=False, eager=False, **kw):
+    def check_dates_order(self, columns, strictly_ascending=False, **kw):
         fmts = {c: self._fmt(c) for c in columns}  # table.py:554-576
-        return self._add([C.dates_order(columns, fmts, strictly_ascending)], eager, **kw)
+        return self._add([C.dates_order(columns, fmts, strictly_ascending)], **kw)
 
-    def check_values_order(self, columns, strictly_ascending=False, eager=False, **kw):
-        return self._add([C.values_order(columns, strictly_ascending)], eager, **kw)
+    def check_values_order(self, columns, strictly_ascending=False, **kw):
+        return self._add([C.values_order(columns, strictly_ascending)], **kw)
 
-    def check_values_in_list(self, column, values, case_sensitive=True, eager=False, **kw):
+    def check_values_in_list(self, column, values, case_sensitive=True, **kw):
         return self._add(
-            [C.values_in_list(column, values, case_sensitive)], eager, **kw
+            [C.values_in_list(column, values, case_sensitive)], **kw
         )  # table.py:603-641
 
-    def check_column_match_regex(self, column, regex, case_sensitive=True, eager=False, **kw):
+    def check_column_match_regex(self, column, regex, case_sensitive=True, **kw):
         return self._add(
-            [C.match_regex(column, regex, case_sensitive)], eager, **kw
+            [C.match_regex(column, regex, case_sensitive)], **kw
         )  # table.py:644-681
 
-    def check_custom_condition(self, condition, description=None, eager=False, **kw):
+    def check_custom_condition(self, condition, description=None, **kw):
         # rule_id forwarded so several custom conditions can coexist on one
         # table (default id is the shared "custom_condition")
         r = C.custom_condition(condition, **(
@@ -244,14 +248,14 @@ class QualityTable:
         ))  # table.py:684-708
         if description:
             r.description = description
-        return self._add([r], eager, **kw)
+        return self._add([r], **kw)
 
     def check_match_dimension_table(
-        self, dim, foreign_key, primary_key=None, eager=False, **kw
+        self, dim, foreign_key, primary_key=None, **kw
     ):  # table.py:711-734
         dim_df = dim.df if isinstance(dim, QualityTable) else dim
         return self._add(
-            [C.match_dimension(dim_df, foreign_key, primary_key)], eager, **kw
+            [C.match_dimension(dim_df, foreign_key, primary_key)], **kw
         )
 
     @staticmethod
@@ -264,7 +268,7 @@ class QualityTable:
 
     def check_dates_order_dimension_table(
         self, dim, foreign_keys, primary_keys, left_columns, right_columns,
-        operator=">=", eager=False, **kw,
+        operator=">=", **kw,
     ):  # table.py:737-776: lists for FKs (composite) and left/right columns
         dim_df = dim.df if isinstance(dim, QualityTable) else dim
         return self._add(
@@ -274,12 +278,12 @@ class QualityTable:
                 )
                 for lc, rc in self._pairs(left_columns, right_columns)
             ],
-            eager, **kw,
+            **kw,
         )
 
     def check_values_order_dimension_table(
         self, dim, foreign_keys, primary_keys, left_columns, right_columns,
-        operator="<=", eager=False, **kw,
+        operator="<=", **kw,
     ):  # table.py:779-816: same left×right fan-out and composite FK support
         dim_df = dim.df if isinstance(dim, QualityTable) else dim
         return self._add(
@@ -289,19 +293,18 @@ class QualityTable:
                 )
                 for lc, rc in self._pairs(left_columns, right_columns)
             ],
-            eager, **kw,
+            **kw,
         )
 
     def check_period_intersection_rows(
-        self, start_date, end_date, id_columns=None, extremes_exclude=False,
-        eager=False, **kw,
+        self, start_date, end_date, id_columns=None, extremes_exclude=False, **kw,
     ):  # table.py:818-844
         return self._add(
             [C.period_intersection(start_date, end_date, id_columns, extremes_exclude)],
-            eager, **kw,
+            **kw,
         )
 
-    def run_basic_check(self, eager=False, **kw):  # table.py:431-436 (checks 1+2+3+4)
+    def run_basic_check(self, **kw):  # table.py:431-436 (checks 1+2+3+4)
         out = []
         out += self.check_index_not_null(**kw)
         out += self.check_duplicate_index(**kw)
@@ -310,8 +313,6 @@ class QualityTable:
         dt_cols = [c for c in self.datetime_columns]
         if dt_cols:
             out += self.check_datetime_format(dt_cols, **kw)
-        if eager:
-            self.run(only=[r.rule_id for r in out])
         return out
 
     # -- execution -----------------------------------------------------------

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import gzip as _gzip
 import io
-import zlib
 from datetime import datetime, timezone
 
 import pandas as pd
@@ -109,15 +108,12 @@ def parse_warc_bytes(raw: bytes):
 
 
 # Raw segments above this size trigger a loud warning naming the scale
-# paths. Parallelism of read_warc is FILE-grain: a few huge .warc.gz
+# path. Parallelism of read_warc is FILE-grain: a few huge .warc.gz
 # segments serialize, and binaryFile materializes each whole file in one
 # task's memory. Gzip member boundaries cannot be located without a
 # sequential decompress of everything before them (magic-byte scans
-# false-positive inside compressed data) — but that decompress can be a
-# BOUNDED-MEMORY discard pass that only records offsets, which is what
-# read_warc_split does (scan job → ranged-read job; segment bytes read
-# twice, task memory one chunk + one record). The zero-extra-pass scale
-# path remains the CDX index (record offsets precomputed at crawl time).
+# false-positive inside compressed data); the scale path is the CDX index
+# (record offsets precomputed at crawl time).
 WARN_SEGMENT_BYTES = 256 << 20
 
 
@@ -152,9 +148,7 @@ def read_warc(
             f"materialized whole in task memory; segment(s) exceed "
             f"{warn_segment_bytes >> 20} MiB: {names}. Use read_warc_cdx "
             "with the crawl's CDX index for record-grain ranged reads "
-            "(bounded memory, record-level parallelism), or "
-            "read_warc_split to derive member boundaries on the fly "
-            "(one extra bounded-memory scan pass, no index needed).",
+            "(bounded memory, record-level parallelism).",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -260,19 +254,16 @@ def read_warc_cdx(
     return _ranged_fetch(plan, warc_dir)
 
 
-def _ranged_fetch(plan: DataFrame, warc_dir: str | None) -> DataFrame:
-    """Shared ranged-read stage over a (filename, offset, length) plan:
-    per task, group by file, seek each range sequentially, parse. Peak
-    memory is one record's bytes. `warc_dir` resolves relative filenames
-    (CDX indexes); None means filenames are already absolute paths
-    (read_warc_split)."""
+def _ranged_fetch(plan: DataFrame, warc_dir: str) -> DataFrame:
+    """Ranged-read stage over a (filename, offset, length) plan: per task,
+    group by file, seek each range sequentially, parse. Peak memory is one
+    record's bytes. `warc_dir` resolves the index's relative filenames."""
 
     def fetch(batches):
         for pdf in batches:
             rows = []
             for fname, grp in pdf.groupby("filename", sort=False):
-                local = f"{warc_dir}/{fname}" if warc_dir is not None else fname
-                with open(local, "rb") as fh:
+                with open(f"{warc_dir}/{fname}", "rb") as fh:
                     for off, ln in zip(grp["offset"], grp["length"]):
                         fh.seek(int(off))
                         rows.extend(parse_warc_bytes(fh.read(int(ln))))
@@ -287,92 +278,6 @@ def _ranged_fetch(plan: DataFrame, warc_dir: str | None) -> DataFrame:
             )
 
     return plan.mapInPandas(fetch, PAGES_SCHEMA)
-
-
-def iter_gzip_members(fh, chunk_bytes: int = 1 << 20):
-    """Yield (offset, length) of every gzip member in a concatenated-member
-    stream. Sequential decompress with the OUTPUT DISCARDED and only one
-    chunk of compressed input held at a time — the bounded-memory boundary
-    scan (member ends are only knowable by decompressing up to them; this
-    pays that pass without materializing anything)."""
-    start = 0          # offset where the current member began
-    fed = 0            # absolute offset of the end of bytes handed to d
-    d = zlib.decompressobj(31)  # 31 = gzip wrapper
-    pending = b""
-    while True:
-        data = pending or fh.read(chunk_bytes)
-        pending = b""
-        if not data:
-            break
-        d.decompress(data)
-        fed += len(data)
-        if d.eof:
-            rest = d.unused_data
-            end = fed - len(rest)
-            yield start, end - start
-            start = end
-            fed = end
-            d = zlib.decompressobj(31)
-            pending = rest
-    # a truncated trailing member never reaches eof: dropped here, exactly
-    # as its parse would fail — a torn tail must not become a phantom range
-
-
-def read_warc_split(
-    spark: SparkSession,
-    path: str,
-    num_tasks: int | None = None,
-    chunk_bytes: int = 1 << 20,
-) -> DataFrame:
-    """Record-grain WARC reading WITHOUT a CDX index: a first job streams
-    each segment once recording its gzip member boundaries (one task per
-    file, memory = one chunk — never the whole segment), then the ranged
-    fetch stage reads members range-partitioned across `num_tasks` (default
-    the cluster's default parallelism). Splits the Common-Crawl per-record-
-    member framing; a whole-file-gzip or uncompressed segment yields one
-    range and degrades to read_warc's grain for that file. Costs one extra
-    sequential read of the segment bytes — the tradeoff vs read_warc_cdx,
-    which gets the boundaries for free from the crawl-time index."""
-    from urllib.parse import urlparse
-
-    listing = spark.read.format("binaryFile").load(path).select(
-        F.col("path").alias("file")
-    )
-
-    def scan(batches):
-        for pdf in batches:
-            files, offs, lens = [], [], []
-            for p in pdf["file"]:
-                local = urlparse(p).path if "://" in p or p.startswith(
-                    "file:") else p
-                with open(local, "rb") as fh:
-                    magic = fh.read(2)
-                    fh.seek(0, io.SEEK_END)
-                    size = fh.tell()
-                    fh.seek(0)
-                    if magic == b"\x1f\x8b":
-                        for off, ln in iter_gzip_members(fh, chunk_bytes):
-                            files.append(local)
-                            offs.append(off)
-                            lens.append(ln)
-                    else:  # plain .warc: not splittable without parsing
-                        files.append(local)
-                        offs.append(0)
-                        lens.append(size)
-            yield pd.DataFrame({
-                "filename": files,
-                "offset": pd.Series(offs, dtype="int64"),
-                "length": pd.Series(lens, dtype="int64"),
-            })
-
-    members = listing.mapInPandas(
-        scan, "filename string, offset bigint, length bigint"
-    )
-    n = num_tasks or spark.sparkContext.defaultParallelism
-    plan = members.repartitionByRange(
-        n, F.col("filename"), F.col("offset")
-    ).sortWithinPartitions("filename", "offset")
-    return _ranged_fetch(plan, None)
 
 
 def write_warc_cdx(path: str, records, cdx_path: str) -> None:

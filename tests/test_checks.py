@@ -208,6 +208,67 @@ def test_values_order_dimension(spark):
     assert got == {2}
 
 
+def _fact_side(df) -> list[str]:
+    """Node names of df's physical plan (read, not run) along the fact
+    side: every subtree except the build child of a BroadcastHashJoin."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the pre-execution plan, exchanges placed
+
+    def walk(n):
+        yield n.nodeName()
+        if n.nodeName() == "BroadcastHashJoin":
+            build_right = n.buildSide().toString() == "BuildRight"
+            kids = [n.left() if build_right else n.right()]
+        else:
+            ch = n.children()
+            kids = [ch.apply(i) for i in range(ch.size())]
+        for k in kids:
+            yield from walk(k)
+
+    return list(walk(plan))
+
+
+def test_join_shapes_dim_broadcast_and_unhinted_lsh(spark):
+    """The dimension checks always broadcast the dim side, so the fact side
+    never shuffles; the LSH pair finders' verify joins carry no hint (AQE
+    decides from measured sizes). Read from the plans, no job runs."""
+    from data_quality_spark.ops import dedup as D
+    from data_quality_spark.ops import similarity as S
+
+    fact = spark.createDataFrame(
+        [(1, 1, "2021-02-01"), (2, 2, "2021-02-01")],
+        "idx int, user_id int, selling_date string",
+    )
+    dim = spark.createDataFrame(
+        [(1, "2021-01-01"), (2, "2021-06-01")], "id int, registration_date string"
+    )
+    eng = RuleEngine([
+        C.match_dimension(dim, "user_id", "id"),
+        C.dates_order_dimension(
+            dim, "user_id", "id", "selling_date", "registration_date", ">="
+        ),
+    ])
+    names = _fact_side(eng.flags(fact))
+    assert names.count("BroadcastHashJoin") == 2
+    assert [n for n in names if "Exchange" in n] == []
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the cat sat on a mat")],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(1, [0.1] * S.EMB_DIM), (2, [0.2] * S.EMB_DIM)],
+        "vec_id long, v array<double>",
+    )
+    for pairs in (
+        D.minhash_lsh_pairs(docs, "doc_id", "text"),
+        S.cosine_lsh_pairs(vecs, "vec_id", "v"),
+    ):
+        opt = pairs._jdf.queryExecution().optimizedPlan().toString()
+        assert "ResolvedHint" not in opt and "strategy=" not in opt
+
+
 # --- #15 period intersection (period_intersection.py) ------------------------
 def _periods(spark, rows):
     return rows
@@ -596,3 +657,30 @@ def test_results_df_matches_check_lists(spark, sf_dir):
     )
     assert len(want) == 3
     assert sorted(tuple(r) for r in got.collect()) == want
+
+
+def test_check_options_reject_unknown_keywords(spark):
+    """check_* methods accept only the per-check options ignore_filters,
+    flag_warning and n_max_rows_output: a misspelt or unsupported keyword
+    raises instead of being silently dropped, and no rule is recorded."""
+    from data_quality_spark.rules.table import QualityTable
+
+    t = QualityTable(
+        spark.createDataFrame([(1, "a")], "idx int, c string"), index_column="idx"
+    )
+    for kw in ({"flag_warnings": True}, {"rule_id": "x"}, {"eager": True}):
+        with pytest.raises(TypeError):
+            t.check_values_in_list("c", ["a"], **kw)
+    with pytest.raises(TypeError):
+        t.run_basic_check(flag_warnings=True)
+    assert t.rules == []
+
+    (r,) = t.check_values_in_list(
+        "c", ["a"], ignore_filters="idx = 2", flag_warning=True,
+        n_max_rows_output=3,
+    )
+    assert r.severity == "warning" and r.max_rows == 3
+    (d,) = t.check_index_not_null()
+    assert d.severity == "fail" and d.max_rows == t.n_max_rows_output
+    (cc,) = t.check_custom_condition("idx < 0", rule_id="neg_idx")
+    assert cc.rule_id == "neg_idx"

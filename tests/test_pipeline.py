@@ -768,11 +768,6 @@ def test_host_rank_broadcast_gated_on_artifact_size(spark, tmp_path, monkeypatch
         out = with_host_rank(pages, cfg)
     opt = out._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in opt and "hints=" not in opt
-    # explicit opt-in still forces the hint regardless of size
-    forced = with_host_rank(pages, cfg, broadcast=True)
-    assert "Broadcast" in (
-        forced._jdf.queryExecution().executedPlan().toString()
-    )
     # and the join result is unchanged either way
     assert sorted(r["host_rank"] for r in out.collect()) == [0.9] * 10
 
@@ -1207,3 +1202,18 @@ def test_py4j_round_trip_budget(spark, fixture_path):
         client.send_command = real
         gc.enable()
     assert n[0] <= 1000, f"{n[0]} py4j round trips for one warm build"
+
+
+def test_driver_priority_names_registered():
+    """Every name in __spark_entry__.DRIVER_PRIORITY is unique, is a
+    registered query and has an oracle twin: queries() builds its leading
+    window with `if name in merged`, so a renamed or deleted query would
+    otherwise drop out of the verified window without a sound."""
+    import __spark_entry__ as E
+
+    names = E.DRIVER_PRIORITY
+    assert len(names) == len(set(names))
+    qs, oracles = E.queries(), E.oracle_sql()
+    assert [n for n in names if n not in qs] == []
+    assert [n for n in names if n not in oracles] == []
+    assert list(qs)[: len(names)] == names
