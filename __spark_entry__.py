@@ -19,19 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _configure(spark: SparkSession) -> SparkSession:
-    # reference semantics: invalid casts yield NULL (never error) — Spark 4
-    # defaults ANSI on, so flip it off for engine parity (SURVEY.md §1.2).
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from data_quality_spark.queries import q_rule_metrics
 
-    _configure(spark)
     return q_rule_metrics(spark, "/root/testdata/sf0.001")
 
 
@@ -89,14 +80,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from data_quality_spark import queries as Q
     from data_quality_spark import queries_ops as QO
 
-    def wrap(fn):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return fn(_configure(spark), sf_dir)
-
-        return run
-
-    merged = {name: wrap(fn) for name, fn in Q.CHECK_QUERIES.items()}
-    merged.update({name: wrap(fn) for name, fn in QO.OPS_QUERIES.items()})
+    merged = {**Q.CHECK_QUERIES, **QO.OPS_QUERIES}
     out = {name: merged[name] for name in DRIVER_PRIORITY if name in merged}
     out.update(merged)  # remaining entries keep their registry order
     return out

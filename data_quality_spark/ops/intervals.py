@@ -45,6 +45,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 
 def overlapping_periods_global(
@@ -76,13 +77,14 @@ def _key_struct(sort_cols: list[str]) -> Column:
 
 def _literal_struct(row, sort_cols: list[str], schema) -> Column:
     # field-exact literal twin of _key_struct (same names + types, so the
-    # struct comparison resolves without implicit casts)
-    return F.struct(
-        *[
-            F.lit(row[c]).cast(schema[c].dataType).alias(c)
-            for c in sort_cols
-        ]
-    )
+    # struct comparison resolves without implicit casts). NTZ goes in as ISO
+    # text: a naive datetime is an LTZ literal, shifted by the session zone.
+    def lit(c: str, v) -> Column:
+        if v is not None and isinstance(schema[c].dataType, TimestampNTZType):
+            v = v.isoformat(" ")
+        return F.lit(v).cast(schema[c].dataType).alias(c)
+
+    return F.struct(*[lit(c, row[c]) for c in sort_cols])
 
 
 def _sample_partitions(df: DataFrame, sort_cols: list[str], n: int) -> list:

@@ -2178,8 +2178,8 @@ def registered_domain(host: Column, psl_multi=PSL_MULTI_DEFAULT) -> Column:
     # suffixes run longest→shortest, so element 1 is the longest match;
     # the bare-TLD default rule is the 1-label suffix (last element)
     pub = F.coalesce(
-        F.element_at(matches, 1),
-        F.element_at(suffixes, F.size(suffixes)),
+        F.try_element_at(matches, F.lit(1)),
+        F.try_element_at(suffixes, F.size(suffixes)),
     )
     prefix = F.substring(
         host, F.lit(1), F.length(host) - F.length(pub) - F.lit(1)

@@ -90,24 +90,28 @@ def norm_key(c: Column | str, dtype=None) -> Column:
     are unchanged by construction; the per-row regex cost on e.g. a bigint
     FK at 10^12 rows disappears (VERDICT r2 'what's wrong' #1)."""
     col = F.col(c) if isinstance(c, str) else c
-    if dtype is not None and isinstance(dtype, _PLAIN_KEY_TYPES):
+    if isinstance(dtype, _PLAIN_KEY_TYPES):
         return col.cast("string")
     s = col.cast("string")
-    if dtype is not None and isinstance(dtype, StringType):
-        # reference parity: pandas str() never re-renders a STRING that
-        # merely looks like scientific notation ('1e5' stays '1e5', so it
-        # must NOT match a numeric 100000 key); only the trailing-zero
-        # stripping applies to string keys
-        pass
-    else:
-        dec = col.cast("decimal(38,18)")
+    # reference parity: pandas str() never re-renders a STRING that merely
+    # looks like scientific notation ('1e5' stays '1e5', so it must NOT
+    # match a numeric 100000 key); only the trailing-zero stripping applies
+    if not isinstance(dtype, StringType):
+        # parse a rendering, never the column, so any type casts and try_cast
+        # NULLs what does not parse; a float parses at its double value
+        # (typeof folds at plan time, leaving one branch)
+        num = F.when(
+            F.typeof(col) == "float",
+            s.try_cast("float").cast("double").cast("string"),
+        ).otherwise(s)
+        dec = num.try_cast("decimal(38,18)")
         s = F.when(
             # strictly a scientific-notation NUMBER rendering, and only
             # when the decimal representation is exact (no overflow-NULL,
             # no tiny-value collapse)
             s.rlike(r"^-?[0-9]+(\.[0-9]+)?[eE][+-]?[0-9]+$")
             & dec.isNotNull()
-            & (dec.cast("double") == col.cast("double")),
+            & (dec.cast("double") == num.try_cast("double")),
             dec.cast("string"),
         ).otherwise(s)
     s = F.regexp_replace(s, r"\.([0-9]*[1-9])0+$", ".$1")

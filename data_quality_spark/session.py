@@ -5,16 +5,10 @@ The reference's ``DataQualitySession`` owns a list of tables and source adapters
 (``sources.py:41-88``). Here the single dialect is Spark SQL, so the session
 just wraps a ``SparkSession`` tuned for the quality-filter workload.
 
-Config choices (scale rationale):
-  - ANSI OFF: the reference requires invalid casts to yield NULL, never error
-    (``bigquery.py:42-55`` safe_cast probing; ``impala.py:21-34``). Spark 4
-    defaults ANSI on, so we disable it and additionally use try_* functions.
-  - AQE ON + skew-join: runtime coalescing of shuffle partitions and skew
-    splitting — the reference has no notion of skew (single-node pandas);
-    at 100 TB skewed hosts/domains are the norm.
-  - Arrow ON: every model-scoring stage (langid/perplexity) is a vectorized
-    pandas UDF; Arrow batches are the JVM<->Python boundary.
-  - session timezone UTC: deterministic timestamp semantics for oracle parity.
+get_spark sets only the keys below, each with its reason; the rest keep
+Spark's defaults (ANSI on, AQE, 10000-row Arrow batches). Invalid casts
+yield NULL (reference ``bigquery.py:42-55``, ``impala.py:21-34``) through
+``try_*`` functions in the ops, not a session flag.
 """
 
 from __future__ import annotations
@@ -30,11 +24,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine-required configs.
-
-    ``master`` defaults to local[$SPARK_GRAFT_CPUS] (sandbox) — on a real
-    cluster leave it None and let spark-submit decide.
-    """
+    """Build (or fetch) a SparkSession. ``master`` defaults to
+    local[$SPARK_GRAFT_CPUS] (sandbox) — on a real cluster leave it None
+    and let spark-submit decide."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
@@ -44,20 +36,21 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.ansi.enabled", "false")
+        # timestamps render the same on every machine (oracle parity)
         .config("spark.sql.session.timeZone", "UTC")
+        # one reduce wave on the local master instead of the fixed 200
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # toPandas and createDataFrame(pandas) go through Arrow
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # pages rows carry multi-KB html blobs: the default 4096-row
         # vectorized-reader batch spikes to ~10+ MB per column per task and
         # OOMs small heaps (observed under spark-submit's 1g default)
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
+        # local mode runs the executors inside this same JVM
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # no HTTP server or port per session; the status store stays on
         .config("spark.ui.enabled", "false")
+        # dimension tables / dedup key sets up to 64 MB (not 10) broadcast
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
@@ -73,7 +66,7 @@ class QualitySession:
       create_table_from_dataframe (holder:21-40)  -> table_from_df
       create_table_from_db        (holder:42-58)  -> table_from_parquet / table_from_sql
       create_table_apply_filter   (holder:60-69)  -> QualityTable.with_filter (lazy, no deepcopy)
-      create_html_output / excel  (holder:72-85)  -> results_df / samples_df metrics tables
+      create_html_output / excel  (holder:72-85)  -> same names, report.py
     """
 
     def __init__(self, spark: SparkSession | None = None):

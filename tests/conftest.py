@@ -22,13 +22,17 @@ def sf_dir():
 
 
 @pytest.fixture
-def ansi_on(spark):
-    """The shared session with spark.sql.ansi.enabled=true for one test
-    (get_spark turns ANSI off); the prior value is restored afterwards."""
-    key = "spark.sql.ansi.enabled"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, "true")
-    try:
-        yield spark
-    finally:
-        spark.conf.set(key, prior)
+def session_conf(spark):
+    """Set keys on the shared session for one test:
+    ``session_conf({"spark.sql.ansi.enabled": "false"})``. Each key's prior
+    value is restored afterwards."""
+    prior: dict[str, str] = {}
+
+    def apply(conf: dict[str, str]):
+        for key, value in conf.items():
+            prior.setdefault(key, spark.conf.get(key))
+            spark.conf.set(key, value)
+
+    yield apply
+    for key, value in prior.items():
+        spark.conf.set(key, value)

@@ -1347,6 +1347,42 @@ def test_overlap_state_stale_input_raises(spark):
     assert n == 300
 
 
+def test_overlap_state_ignores_session_time_zone(spark, session_conf):
+    """NTZ range boundaries are zone-free literals: the state and flags
+    computed on a session west of UTC equal the UTC ones. A naive datetime
+    literal would shift every boundary by the session offset, and the pid
+    counts would then disagree with the recorded state."""
+    import datetime as dt
+
+    from data_quality_spark.ops import intervals as IV
+
+    base = dt.datetime(2024, 1, 1, 0, 9, 58)
+    rows = [
+        (i, base + dt.timedelta(minutes=3 * i),
+         base + dt.timedelta(minutes=3 * i + (5 if i % 7 == 0 else 2)))
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, start_ts timestamp_ntz, end_ts timestamp_ntz"
+    )
+
+    def run():
+        state = IV.compute_overlap_state(
+            df, "start_ts", "end_ts", tiebreak_cols=["event_id"],
+            num_partitions=6,
+        )
+        flags = IV.overlap_flags_global(
+            df, "start_ts", "end_ts", tiebreak_cols=["event_id"], state=state
+        ).select("event_id", "__overlap_ko").collect()
+        return state, sorted(tuple(r) for r in flags)
+
+    session_conf({"spark.sql.session.timeZone": "UTC"})
+    utc = run()
+    assert sum(ko for _, ko in utc[1]) > 50
+    session_conf({"spark.sql.session.timeZone": "America/Los_Angeles"})
+    assert run() == utc
+
+
 def test_q_period_overlap_global_caches_state(spark, monkeypatch):
     """The registered query memoizes the plan state per sf_dir: the second
     invocation runs ONLY the flag pass (compute_overlap_state poisoned)."""
@@ -2852,7 +2888,7 @@ def test_connected_components_long_path_converges(spark):
     assert all(r["component_size"] == n for r in rows)
 
 
-def test_connected_components_ansi_on(spark, ansi_on):
+def test_connected_components_ansi_on(spark, session_conf):
     """The convergence fingerprint must not overflow under ANSI: a 40-edge
     chain gives the same single component with ANSI on as with it off."""
     from data_quality_spark.ops import graph as G
@@ -2869,8 +2905,9 @@ def test_connected_components_ansi_on(spark, ansi_on):
             for r in G.connected_components(edges).collect()
         )
 
+    session_conf({"spark.sql.ansi.enabled": "true"})
     on = components()
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    session_conf({"spark.sql.ansi.enabled": "false"})
     off = components()
     assert on == off == [(f"n{i:02d}", "n00", n) for i in range(n)]
 

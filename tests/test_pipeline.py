@@ -1217,3 +1217,48 @@ def test_driver_priority_names_registered():
     assert [n for n in names if n not in qs] == []
     assert [n for n in names if n not in oracles] == []
     assert list(qs)[: len(names)] == names
+
+
+# one query per op whose result could depend on session state: element_at
+# under ANSI, casts of non-numeric keys, NTZ range boundaries under a
+# non-UTC zone, and the graph / sketch / sampling arithmetic
+SESSION_SLICE = [
+    "text_reg_domain", "match_dimension_floatkey", "period_overlap_global",
+    "period_intersection", "dates_order_dim", "graph_conn_comp",
+    "sketch_distinct_hll", "text_weighted_sample",
+]
+
+
+@pytest.mark.parametrize(
+    "ansi, tz", [("false", "UTC"), ("true", "America/Los_Angeles")]
+)
+def test_registry_slice_on_any_session(spark, sf_dir, session_conf, ansi, tz):
+    """The engine sets no session state of its own, so a registry query
+    must hold on whatever session it is handed: run straight from
+    Q.CHECK_QUERIES / QO.OPS_QUERIES under ANSI off + UTC and under ANSI on
+    + a zone west of UTC, each query hash-equals its DuckDB twin."""
+    import duckdb
+
+    from data_quality_spark import queries as Q
+    from data_quality_spark import queries_ops as QO
+    from tools.compare_oracle import TABLES, value_hash
+
+    session_conf({
+        "spark.sql.ansi.enabled": ansi, "spark.sql.session.timeZone": tz,
+    })
+    registry = {**Q.CHECK_QUERIES, **QO.OPS_QUERIES}
+    oracles = {**Q.CHECK_ORACLES, **QO.OPS_ORACLES}
+    con = duckdb.connect()
+    for t in TABLES:
+        if os.path.exists(f"{sf_dir}/{t}.parquet"):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    bad = {}
+    for name in SESSION_SLICE:
+        want = value_hash(con.execute(oracles[name]).df())
+        try:
+            got = value_hash(registry[name](spark, sf_dir).toPandas())
+        except Exception as ex:  # report every query, not the first error
+            got = str(ex).splitlines()[0][:120]
+        if got != want:
+            bad[name] = got
+    assert bad == {}

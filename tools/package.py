@@ -8,10 +8,6 @@ Launch recipe (multi-executor cluster):
     spark-submit \
       --py-files dist/data_quality_spark.zip \
       --driver-memory 4g --executor-memory 8g \
-      --conf spark.sql.ansi.enabled=false \
-      --conf spark.sql.adaptive.enabled=true \
-      --conf spark.sql.adaptive.skewJoin.enabled=true \
-      --conf spark.sql.execution.arrow.pyspark.enabled=true \
       run_quality_filter.py --input <pages path> --out <out dir>
 
 (The models — langid profiles, perplexity LM — are deterministic module-level
