@@ -60,14 +60,6 @@ _NGRAM_RANGE = (2, 3)
 _ALPHA = 0.5  # add-k smoothing
 
 
-def _hash_ngram(s: str) -> int:
-    # FNV-1a 32-bit — tiny, deterministic, identical everywhere.
-    h = 0x811C9DC5
-    for ch in s.encode("utf-8"):
-        h = ((h ^ ch) * 0x01000193) & 0xFFFFFFFF
-    return h % N_BUCKETS
-
-
 _FNV_OFFSET = np.uint64(0x811C9DC5)
 _FNV_PRIME = np.uint64(0x01000193)
 _MASK32 = np.uint64(0xFFFFFFFF)
@@ -82,9 +74,9 @@ def _ngram_buckets(text: str) -> np.ndarray:
     vectorized twin of scalar FNV-1a over each gram's UTF-8 bytes.
 
     Grams are taken over the UTF-8 BYTE stream, which for multibyte chars
-    differs from char-grams — but it is applied identically at train time
-    (``_hash_ngram`` hashes encoded bytes too, and training words hash the
-    full word's bytes) and in every consumer, so the model is self-consistent.
+    differs from char-grams — but training (the seed words go through this
+    same function) and every consumer apply it identically, so the model is
+    self-consistent.
     """
     t = f" {text.lower()} "
     b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.uint64)

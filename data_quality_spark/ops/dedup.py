@@ -626,14 +626,6 @@ def _band_key(mh: Column, band: int, rows: int = LSH_ROWS) -> Column:
     return portable_hash64(joined)
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    inter = F.size(F.array_intersect(a, b))
-    return F.when(
-        (F.size(a) + F.size(b) - inter) > 0,
-        inter.cast("double") / (F.size(a) + F.size(b) - inter),
-    ).otherwise(F.lit(0.0))
-
-
 def _text_jaccard_udf(n: int):
     """Exact Jaccard over word n-gram sets computed FROM RAW TEXT inside the
     verify stage. Lets candidate generation stay id-only: the verification
@@ -890,38 +882,6 @@ def minhash_incremental_matches(
 # ---------------------------------------------------------------------------
 # 3 — SimHash
 # ---------------------------------------------------------------------------
-
-
-def simhash_from_hashes(hs: Column, total: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash given a precomputed hash array: bit j set iff
-    Σ_s (±1 by bit j of hash(s)) > 0. The hash array MUST be materialized in
-    its own projection by the caller: higher-order functions are interpreted
-    (no codegen CSE), so an inline transform here would be re-evaluated once
-    per bit — bits× the md5 work."""
-
-    def bit_sum(j: int) -> Column:
-        # ones_j − zeros_j = 2*ones_j − n
-        ones = F.aggregate(
-            hs,
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.shiftright(x, j).bitwiseAND(F.lit(1).cast("long")),
-        )
-        return 2 * ones - total
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        out = out + F.when(bit_sum(j) > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
-
-
-def simhash(shingles: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Inline-convenience variant (tests / one-off exprs). For data-path use
-    prefer materializing the hash array first — see simhash_from_hashes."""
-    return simhash_from_hashes(
-        F.transform(shingles, lambda s: portable_hash64(s)), F.size(shingles), bits
-    )
 
 
 def simhash_pairs(

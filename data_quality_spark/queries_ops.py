@@ -402,19 +402,26 @@ def _persisted_sig_index(spark, sf_dir, seen_docs):
     index; it never re-shingles historical text). Rebuilding the index
     inside every q_dedup_minhash_incr call charged the probe operator for
     index construction — at scale those are different jobs on different
-    cadences (index: once per ingested batch; probe: every new batch)."""
+    cadences (index: once per ingested batch; probe: every new batch).
+
+    The file is per process (pid in its name) and removed at exit: with
+    one shared path, a process could read the index while another
+    rewrote it."""
+    import atexit
     import os
+    import shutil
 
     from data_quality_spark.pipeline.expected import EXPECTED_DIR
 
     key = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(EXPECTED_DIR, f"sig_index_{key}.parquet")
+    path = os.path.join(EXPECTED_DIR, f"sig_index_{key}_{os.getpid()}.parquet")
     if sf_dir not in _SIG_INDEX_BUILT:
         os.makedirs(EXPECTED_DIR, exist_ok=True)
         D.minhash_signature_index(seen_docs, "doc_id", "text").write.mode(
             "overwrite"
         ).parquet(path)
         _SIG_INDEX_BUILT.add(sf_dir)
+        atexit.register(shutil.rmtree, path, True)
     return spark.read.parquet(path)
 
 

@@ -11,10 +11,13 @@ Reference surface replaced here:
     free static HTML page off the same metrics: % KO gauge per table,
     per-check table sorted by n_ko (plot.py:241-242), capped sample rows.
 
-The KO rows come from the engine's single-pass ``annotate`` frame
-(fired_descriptions already merged per row with " - ", replacing the
-reference's union + groupby-merge ``_create_ko_rows``, table.py:191-232);
-export caps rows per table like the reference's row-sample cap.
+Both read what ``QualityTable.run(get_rows_flag=True)`` kept, and run no
+Spark job: each check's counts and capped sample (``check_list``) and the
+table's merged KO rows (``merged_ko_rows``: the samples' rows, one per
+source row, with fired_descriptions merged by " - " — the reference's
+union + groupby-merge ``_create_ko_rows``, table.py:191-232). A table run
+without samples is sampled once, in one plan, on first use. One cap,
+``n_max_rows_output``, sets the rows of the samples, the HTML and the export.
 """
 
 from __future__ import annotations
@@ -22,21 +25,8 @@ from __future__ import annotations
 import html as html_mod
 import os
 
-from pyspark.sql import functions as F
 
-
-def _ko_rows_pdf(table, max_rows: int):
-    ann = table.annotate()
-    ko = ann.where(F.size("fired_rules") > 0)
-    keep = [c for c in (table.output_columns or []) if c]
-    if keep:
-        cols = keep + ["fired_descriptions", "flag_only_warning"]
-    else:
-        cols = [c for c in ko.columns if c not in ("fired_rules", "keep")]
-    return ko.select(*cols).limit(max_rows).toPandas()
-
-
-def export_details(session, path: str, max_rows_per_table: int = 10_000) -> str:
+def export_details(session, path: str) -> str:
     """Merged failing rows per table → one .xlsx (sheet per table) when
     openpyxl exists, else a directory of CSVs. Returns the written path."""
     tables = [t for t in session.tables if t.check_list]
@@ -48,14 +38,14 @@ def export_details(session, path: str, max_rows_per_table: int = 10_000) -> str:
         out = path if path.endswith(".xlsx") else path + ".xlsx"
         with pd.ExcelWriter(out, engine="openpyxl") as xw:
             for t in tables:
-                _ko_rows_pdf(t, max_rows_per_table).to_excel(
+                t.merged_ko_rows().to_excel(
                     xw, sheet_name=str(t.name)[:31], index=False
                 )
         return out
     except ImportError:
         os.makedirs(path, exist_ok=True)
         for t in tables:
-            _ko_rows_pdf(t, max_rows_per_table).to_csv(
+            t.merged_ko_rows().to_csv(
                 os.path.join(path, f"{t.name}_ko_rows.csv"), index=False
             )
         return path
@@ -146,7 +136,7 @@ function sortBy(th){
 """
 
 
-def create_html_output(session, path: str, sample_rows: int = 20) -> str:
+def create_html_output(session, path: str) -> str:
     """Interactive single-file HTML report: one tab per table plus an
     overview, SVG donut gauges, a sortable per-check table, and per-check
     toggleable failing-row samples — the reference's Bokeh
@@ -202,90 +192,71 @@ def create_html_output(session, path: str, sample_rows: int = 20) -> str:
         + "</tbody></table></div>"
     )
 
-    # one tab per table
+    # one tab per table: counts from check_list, rows from the samples
     for ti, (t, info, n_rows) in enumerate(stats):
-        # cache the annotated frame: the tab draws 1 count + 1 sample per
-        # failing check, and without the persist each action would re-run
-        # every prepare join / model UDF stage from scratch
-        ann = t.annotate().persist()
-        try:
-            # over-cap estimation (reference plot.py:184-196): when any
-            # check's KO sample hit its row cap, the reference can only
-            # BOUND the unique-KO-row count — [max single-check n_ko,
-            # min(Σ n_ko, n_rows)] — and prefixes the gauge with '>' when
-            # the bound is loose (range > 1% of rows), '≈' otherwise.
-            over_cap = any(c.flag_over_max_rows for c in t.check_list)
-            if over_cap:
-                min_n = info["max_n_ko"]
-                max_n = min(info["total_n_ko"], n_rows)
-                n_ko_rows = min_n
-                prefix = ">" if n_rows and (max_n - min_n) / n_rows > 0.01 else "≈"
-            else:
-                n_ko_rows = ann.where(F.size("fired_rules") > 0).count()
-                prefix = ""
-            pct = 100.0 * n_ko_rows / n_rows if n_rows else 0.0
-            check_pct = (
-                100.0 * info["n_ko_checks"] / info["n_checks"]
-                if info["n_checks"] else 0.0
+        merged = t.merged_ko_rows()
+        # over-cap estimation (reference plot.py:184-196): when any check's
+        # KO sample hit its row cap, the reference can only BOUND the
+        # unique-KO-row count — [max single-check n_ko, min(Σ n_ko, n_rows)]
+        # — and prefixes the gauge with '>' when the bound is loose (range >
+        # 1% of rows), '≈' otherwise. Under every cap, every KO row was
+        # sampled, so the merged rows count them exactly.
+        if any(c.flag_over_max_rows for c in t.check_list):
+            min_n = info["max_n_ko"]
+            max_n = min(info["total_n_ko"], n_rows)
+            n_ko_rows = min_n
+            prefix = ">" if n_rows and (max_n - min_n) / n_rows > 0.01 else "≈"
+        else:
+            n_ko_rows = len(merged)
+            prefix = ""
+        pct = 100.0 * n_ko_rows / n_rows if n_rows else 0.0
+        check_pct = (
+            100.0 * info["n_ko_checks"] / info["n_checks"]
+            if info["n_checks"] else 0.0
+        )
+        body = [
+            "<div class='tab'>",
+            "<div class='cards'>",
+            f"<div class='card'>{_svg_gauge(pct, prefix=prefix)}</div>",
+            f"<div class='card'>{_svg_gauge(check_pct, 'checks KO')}</div>",
+            f"<div class='card kpi'>{n_rows}<small>rows</small></div>",
+            f"<div class='card kpi'>{html_mod.escape(prefix)}{n_ko_rows}"
+            "<small>rows with ≥1 KO</small></div>",
+            "</div>",
+            "<table class='checks'><thead><tr>"
+            + "".join(
+                f"<th onclick='sortBy(this)'>{h}</th>"
+                for h in ["check", "severity", "n_ko", "n_rows", "status", "sample"]
             )
-            # samples show the SOURCE table's columns only (mirrors
-            # ko_rows' internal-column filter) — never engine/aux columns
-            src_cols = [
-                c for c in (t.output_columns or t.df.columns)
-                if not c.startswith("__")
-            ]
-            body = [
-                "<div class='tab'>",
-                "<div class='cards'>",
-                f"<div class='card'>{_svg_gauge(pct, prefix=prefix)}</div>",
-                f"<div class='card'>{_svg_gauge(check_pct, 'checks KO')}</div>",
-                f"<div class='card kpi'>{n_rows}<small>rows</small></div>",
-                f"<div class='card kpi'>{html_mod.escape(prefix)}{n_ko_rows}"
-                "<small>rows with ≥1 KO</small></div>",
-                "</div>",
-                "<table class='checks'><thead><tr>"
-                + "".join(
-                    f"<th onclick='sortBy(this)'>{h}</th>"
-                    for h in ["check", "severity", "n_ko", "n_rows", "status", "sample"]
-                )
-                + "</tr></thead><tbody>",
-            ]
-            for ci, c in enumerate(sorted(t.check_list, key=lambda c: -c.n_ko)):
-                status = (
-                    "ko" if (c.flag_ko and c.severity == "fail")
-                    else "warn" if c.flag_ko else "ok"
-                )
-                sid = f"s{ti}_{ci}"
-                cap_mark = " (sample capped)" if c.flag_over_max_rows else ""
-                btn = (
-                    f"<button class='tgl' onclick=\"tglSample('{sid}',this)\">"
-                    f"show rows</button>{cap_mark}"
-                    if c.flag_ko
-                    else ""
-                )
+            + "</tr></thead><tbody>",
+        ]
+        for ci, c in enumerate(sorted(t.check_list, key=lambda c: -c.n_ko)):
+            status = (
+                "ko" if (c.flag_ko and c.severity == "fail")
+                else "warn" if c.flag_ko else "ok"
+            )
+            sid = f"s{ti}_{ci}"
+            cap_mark = " (sample capped)" if c.flag_over_max_rows else ""
+            btn = (
+                f"<button class='tgl' onclick=\"tglSample('{sid}',this)\">"
+                f"show rows</button>{cap_mark}"
+                if c.flag_ko
+                else ""
+            )
+            body.append(
+                f"<tr><td>{html_mod.escape(c.description)}</td>"
+                f"<td>{c.severity}</td><td data-v='{c.n_ko}'>{c.n_ko}</td>"
+                f"<td data-v='{c.n_rows}'>{c.n_rows}</td>"
+                f"<td class='status-{status}'>{status.upper()}</td><td>{btn}</td></tr>"
+            )
+            if c.flag_ko:
                 body.append(
-                    f"<tr><td>{html_mod.escape(c.description)}</td>"
-                    f"<td>{c.severity}</td><td data-v='{c.n_ko}'>{c.n_ko}</td>"
-                    f"<td data-v='{c.n_rows}'>{c.n_rows}</td>"
-                    f"<td class='status-{status}'>{status.upper()}</td><td>{btn}</td></tr>"
+                    f"<tr class='sample' id='{sid}'><td colspan='6'>"
+                    + c.ko_rows.to_html(index=False, border=0)
+                    + "</td></tr>"
                 )
-                if c.flag_ko:
-                    cols = [c2 for c2 in src_cols if c2 in ann.columns]
-                    sample = (
-                        ann.where(F.array_contains("fired_rules", c.rule_id))
-                        .select(*cols)
-                        .limit(sample_rows)
-                        .toPandas()
-                    )
-                    body.append(
-                        f"<tr class='sample' id='{sid}'><td colspan='6'>"
-                        + sample.to_html(index=False, border=0)
-                        + "</td></tr>"
-                    )
-            body.append("</tbody></table></div>")
-            parts.append("".join(body))
-        finally:
-            ann.unpersist()
+        body.append("</tbody></table></div>")
+        parts.append("".join(body))
 
     out = path if path.endswith(".html") else path + ".html"
     with open(out, "w") as f:

@@ -19,7 +19,10 @@ exprs, no Python); metrics are one lazy plan: a partial-aggregated ``agg``
 to one row per rule inside Catalyst, so a caller's single collect is the
 only job and no Python worker starts (a driver-side row re-wrapped with
 ``createDataFrame(list)`` would cost one more job, run in Python workers);
-samples use ``limit`` (CollectLimitExec early-out, no full scan).
+every fired rule's capped sample comes from one more plan over the same
+flags (``ko_samples``: a per-rule ``row_number`` limit that Spark applies
+before the exchange), so the sample cost does not grow with the number of
+fired rules.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ from dataclasses import dataclass, field
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_quality_spark.colmemo import memo
@@ -162,12 +165,15 @@ class RuleEngine:
         filtered copies and groupby-merging descriptions with " - ", build
         the array in place with array_compact(when...).
         """
-        flagged = self.flags(df)
+        out = self._annotated(self.flags(df))
+        return out.drop(*[self._flag_name(r) for r in self.rules])
+
+    def _annotated(self, flagged: DataFrame) -> DataFrame:
         out = flagged
         key = ("rules.annotate", self._memo_key())
         for name, col in memo(key, self._annotate_cols):
             out = out.withColumn(name, col)
-        return out.drop(*[self._flag_name(r) for r in self.rules])
+        return out
 
     def _annotate_cols(self) -> tuple:
         """((name, Column), ...) annotate derives from the flag columns.
@@ -224,9 +230,9 @@ class RuleEngine:
         identity map) on a path with no Python UDF.
 
         Pass a precomputed (possibly cached) `flags(df)` frame via
-        `flagged` to share one evaluation with ko_rows — prepare transforms
-        (joins, global-interval materializations) then run once, not once
-        per consumer."""
+        `flagged` to share one evaluation with ko_samples — prepare
+        transforms (joins, global-interval materializations) then run once,
+        not once per consumer."""
         if flagged is None:
             flagged = self.flags(df)
         aggs, rows = memo(("rules.metrics", self._memo_key()), self._metrics_cols)
@@ -259,35 +265,60 @@ class RuleEngine:
         )
         return tuple(aggs), rows
 
-    def ko_rows(
-        self,
-        df: DataFrame,
-        rule_id: str,
-        limit: int | None = None,
-        flagged: DataFrame | None = None,
-    ):
-        """Capped failing-row sample for one rule (check.py:110-126).
+    def ko_samples(self, flagged: DataFrame, columns: list[str]):
+        """Every fired rule's capped failing-row sample from ONE plan
+        (reference check.py:110-126 per check, table.py:191-232 merge).
 
-        Returns (pandas_sample, flag_over_max_rows); over-cap detection =
-        sample size hit the cap (check.py:150-154). `flagged` as in
-        metrics(): reuse one evaluation across rules."""
-        r = next(x for x in self.rules if x.rule_id == rule_id)
-        cap = limit if limit is not None else r.max_rows
-        if flagged is None:
-            flagged = self.flags(df)
-        flagged = flagged.filter(F.col(self._flag_name(r)))
-        cols = r.output_columns or [
-            c for c in df.columns if not c.startswith("__ko_")
-        ]
-        # every sample row is stamped with the check's description
-        # (reference check.py:155 appends check_description to KO samples)
-        sample = (
-            flagged.select(*cols)
-            .withColumn("check_description", F.lit(r.description))
-            .limit(cap + 1)
+        `flagged` is `flags(df)`, persisted by the caller when it has
+        another consumer. Each row gets a `monotonically_increasing_id()`,
+        its fired rule ids are exploded, and `row_number() over (partition
+        by rule order by row id) <= max cap + 1` keeps at most max cap + 1
+        rows per rule. While that literal is at most
+        `spark.sql.optimizer.windowGroupLimitThreshold` (1000), Spark plans
+        a Partial `WindowGroupLimit` before the exchange, so at most that
+        many rows per rule leave each partition. A cap of 1000 or more
+        loses the `WindowGroupLimit`: the exchange then carries every KO
+        row of the fired rules. The rows are collected once through Arrow
+        (`toPandas`; `toArrow` would hand back zone-aware timestamps,
+        which the Excel export rejects), then each rule is cut on the
+        driver to its own cap and output columns (`columns` when it has
+        none) and stamped with `check_description` (check.py:155).
+
+        Returns ({rule_id: (sample, flag_over_max_rows)} for the fired
+        rules, merged KO rows). The merged rows are the rules' samples
+        unioned, one row per source row, as `columns` plus the row's
+        `fired_descriptions` and `flag_only_warning` over all the rules."""
+        rid, rule, rank = "__sample_rid", "__sample_rule", "__sample_rank"
+        cols = list(dict.fromkeys(
+            columns + [c for r in self.rules for c in r.output_columns or []]
+        ))
+        limit = max(r.max_rows for r in self.rules) + 1
+        by_rule = Window.partitionBy(rule).orderBy(rid)
+        pdf = (
+            self._annotated(flagged)
+            .withColumn(rid, F.monotonically_increasing_id())
+            .select(rid, F.explode(self.FIRED).alias(rule), *cols,
+                    self.FIRED_DESC, self.ONLY_WARNING)
+            .withColumn(rank, F.row_number().over(by_rule))
+            .where(F.col(rank) <= limit)
             .toPandas()
+            .sort_values([rule, rank], ignore_index=True)
         )
-        over = len(sample) > cap
-        if over:
-            sample = sample.iloc[:cap]
-        return sample, over
+        caps = {r.rule_id: r.max_rows for r in self.rules}
+        within = pdf[pdf[rank] <= pdf[rule].map(caps)]
+        counts = pdf[rule].value_counts()
+        samples = {}
+        for r in self.rules:
+            if r.rule_id not in counts:
+                continue
+            sample = within.loc[within[rule] == r.rule_id, r.output_columns or columns]
+            samples[r.rule_id] = (
+                sample.assign(check_description=r.description).reset_index(drop=True),
+                bool(counts[r.rule_id] > r.max_rows),
+            )
+        merged = (
+            within.drop_duplicates(rid).sort_values(rid)
+            [columns + [self.FIRED_DESC, self.ONLY_WARNING]]
+            .reset_index(drop=True)
+        )
+        return samples, merged

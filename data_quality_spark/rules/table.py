@@ -8,12 +8,13 @@ as in table.py:364-373).
 Execution model difference, by design: ``check_*`` methods ACCUMULATE rules;
 ``run()`` evaluates every accumulated rule in ONE scan (RuleEngine), then
 fills per-check results (n_ko, flag_ko, capped ko_rows, flag_over_max_rows —
-reference check.py:25-29).
+reference check.py:25-29). With samples requested, every fired check's
+sample and the table's merged KO rows (reference ``Table.ko_rows``,
+table.py:191-232) come from ONE more plan over the same cached flags; the
+HTML report and the export read only those.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -85,6 +86,7 @@ class QualityTable:
         self.n_max_rows_output = n_max_rows_output
         self.rules: list[Rule] = []
         self.check_list: list[CheckResult] = []
+        self._ko_rows = None  # merged KO rows of check_list, see merged_ko_rows
         self.index_problem = False  # reference values_duplicate.py:36-38
 
     # -- df access ----------------------------------------------------------
@@ -318,17 +320,20 @@ class QualityTable:
     # -- execution -----------------------------------------------------------
     def run(self, only: list[str] | None = None, get_rows_flag: bool = False):
         """Evaluate (a subset of) accumulated rules in one pass and append
-        CheckResults (reference check.py:128-164 per-check, here batched)."""
+        CheckResults (reference check.py:128-164 per-check, here batched).
+        With get_rows_flag every fired check's capped sample and the
+        table's merged KO rows come from one more plan over the same
+        flags."""
         rules = [r for r in self.rules if only is None or r.rule_id in only]
         if not rules:
             return []
         eng = RuleEngine(rules)
         df = self.df
         # evaluate the flag projection ONCE and share it between the metrics
-        # aggregate and every per-rule sample: prepare transforms (broadcast
+        # aggregate and the sample plan: prepare transforms (broadcast
         # joins, the global-interval materialization) are not re-run per
-        # consumer, and with samples requested the frame is cached so the k
-        # sample filters read the computed flags instead of recomputing
+        # consumer, and with samples requested the frame is cached so the
+        # sample plan reads the computed flags instead of recomputing them
         flagged = eng.flags(df)
         if get_rows_flag:
             flagged = flagged.persist()
@@ -350,30 +355,44 @@ class QualityTable:
                     n_rows=row["n_rows"],
                     flag_ko=row["n_ko"] > 0,
                 )
-                if get_rows_flag and res.flag_ko:
-                    res.ko_rows, res.flag_over_max_rows = eng.ko_rows(
-                        df, r.rule_id, r.max_rows, flagged=flagged
-                    )
                 if "duplicate" in r.rule_id and res.flag_ko:
                     self.index_problem = True
                 results.append(res)
-                self.check_list.append(res)
+            first = not self.check_list
+            self.check_list += results
+            merged = self._take_samples(eng, flagged, results) if get_rows_flag else None
+            # the merged rows stand for check_list only when this run is all
+            # of it; otherwise merged_ko_rows samples check_list again
+            self._ko_rows = merged if first else None
             return results
         finally:
             if get_rows_flag:
                 flagged.unpersist()
 
-    def download_table(self, n_rows: int | None = None):
-        """Materialize (a capped slice of) the table driver-side as pandas
-        (reference table.py:248-264 `download_table`, which flips a SQL
-        table to dataframe-backed; here: Arrow-accelerated limit+toPandas,
-        report samples only — never the scale path)."""
-        d = self.df
-        if self.output_columns:
-            d = d.select(*self.output_columns)
-        if n_rows is not None:
-            d = d.limit(n_rows)
-        return d.toPandas()
+    def merged_ko_rows(self):
+        """The rows of every check's sample in check_list, one per source
+        row, with the row's merged `fired_descriptions` and
+        `flag_only_warning` (reference `Table.ko_rows`, table.py:191-232).
+        A table run without samples is sampled here, once, in one plan."""
+        if self._ko_rows is None:
+            ids = {c.rule_id for c in self.check_list}
+            eng = RuleEngine([r for r in self.rules if r.rule_id in ids])
+            self._ko_rows = self._take_samples(eng, eng.flags(self.df), self.check_list)
+        return self._ko_rows
+
+    def _take_samples(self, eng: RuleEngine, flagged: DataFrame, results):
+        """Fill each fired result's sample from one collect; return the
+        merged KO rows (no Spark job when nothing fired)."""
+        cols = list(self.output_columns or self.df.columns)
+        if not any(c.flag_ko for c in results):
+            import pandas as pd
+
+            return pd.DataFrame(columns=cols + [eng.FIRED_DESC, eng.ONLY_WARNING])
+        samples, merged = eng.ko_samples(flagged, cols)
+        for c in results:
+            if c.rule_id in samples:
+                c.ko_rows, c.flag_over_max_rows = samples[c.rule_id]
+        return merged
 
     def annotate(self) -> DataFrame:
         """Per-row fired-rules + keep frame for ALL accumulated rules

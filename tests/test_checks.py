@@ -332,7 +332,8 @@ def test_ko_rows_cap(spark):
     rows = [(i, None) for i in range(10)]
     df = spark.createDataFrame(rows, "idx int, A string")
     eng = RuleEngine([C.not_empty_column("A", max_rows=3)])
-    sample, over = eng.ko_rows(df, "not_empty__A")
+    samples, _ = eng.ko_samples(eng.flags(df), df.columns)
+    sample, over = samples["not_empty__A"]
     assert len(sample) == 3 and over  # check.py:150-154 over-cap flag
     # every sample row carries the check description (check.py:155)
     assert "check_description" in sample.columns
@@ -621,6 +622,125 @@ def test_run_jobs_and_lazy_metrics_plan(spark, sf_dir):
     assert {r.rule_id: r.n_ko for r in res} == want
     assert {r["rule_id"]: r["n_ko"] for r in m.collect()} == want
     assert all(r.n_rows == len(pdf) for r in res)
+
+
+def test_ko_samples_match_duckdb(spark, sf_dir, tmp_path):
+    """run(get_rows_flag=True) against DuckDB, with caps below, at and
+    above each check's KO count: every sample row fails its check,
+    len == min(n_ko, cap) and flag_over_max_rows == (n_ko > cap). The
+    exported merged rows are the samples' rows, once each, carrying
+    annotate()'s fired_descriptions."""
+    import os
+
+    import duckdb
+    import pandas as pd
+
+    from data_quality_spark.session import QualitySession
+
+    path = f"{sf_dir}/orders.parquet"
+    status = "values_in_list__o_orderstatus"
+    # rule_id -> KO condition, the same text in Spark SQL and DuckDB
+    conds = {
+        "low": "o_totalprice < 100000",
+        "high": "o_totalprice > 200000",
+        "urgent": "o_orderpriority = '1-URGENT'",
+        "cust7": "o_custkey % 7 = 0",
+        status: "o_orderstatus NOT IN ('F', 'O')",
+    }
+    con = duckdb.connect()
+    want = {
+        rid: {k for (k,) in con.execute(
+            f"SELECT o_orderkey FROM '{path}' WHERE {cond}").fetchall()}
+        for rid, cond in conds.items()
+    }
+    con.close()
+    n = {rid: len(keys) for rid, keys in want.items()}
+    # over by one, exactly at the cap, far over, under, the table default
+    caps = {"low": n["low"] - 1, "high": n["high"], "urgent": 5,
+            "cust7": n["cust7"] + 50}
+
+    s = QualitySession(spark)
+    t = s.table_from_parquet(path, "orders", index_column="o_orderkey")
+    for rid, cond in conds.items():
+        if rid in caps:
+            t.check_custom_condition(cond, rule_id=rid, n_max_rows_output=caps[rid])
+    t.check_values_in_list("o_orderstatus", ["F", "O"])
+    caps[status] = t.n_max_rows_output
+    res = {c.rule_id: c for c in t.run(get_rows_flag=True)}
+
+    sampled = set()
+    for rid in conds:
+        c = res[rid]
+        assert c.n_ko == n[rid] > 0
+        keys = list(c.ko_rows["o_orderkey"])
+        assert set(keys) <= want[rid], rid
+        assert len(keys) == len(set(keys)) == min(n[rid], caps[rid]), rid
+        assert c.flag_over_max_rows == (n[rid] > caps[rid]), rid
+        assert (c.ko_rows["check_description"] == c.description).all()
+        sampled |= set(keys)
+    assert {rid for rid in conds if res[rid].flag_over_max_rows} == {
+        "low", "urgent", status}
+
+    out = s.create_export_details_excel(str(tmp_path / "details"))
+    merged = pd.read_csv(os.path.join(out, "orders_ko_rows.csv"))
+    assert sorted(merged["o_orderkey"]) == sorted(sampled)
+    ann = {
+        row["o_orderkey"]: row["fired_descriptions"]
+        for row in t.annotate()
+        .where(F.col("o_orderkey").isin(sorted(sampled)))
+        .select("o_orderkey", "fired_descriptions")
+        .collect()
+    }
+    assert dict(zip(merged["o_orderkey"], merged["fired_descriptions"])) == ann
+
+
+def test_merged_ko_rows_cover_every_run(spark, sf_dir):
+    """Checks run in two batches: after the second run, merged_ko_rows
+    holds both batches' samples, one row per source row."""
+    from data_quality_spark.session import QualitySession
+
+    t = QualitySession(spark).table_from_parquet(
+        f"{sf_dir}/orders.parquet", "orders", index_column="o_orderkey")
+    t.check_custom_condition("o_custkey % 2 = 0", rule_id="even", n_max_rows_output=30)
+    t.check_custom_condition("o_custkey % 3 = 0", rule_id="three", n_max_rows_output=30)
+    (even,) = t.run(only=["even"], get_rows_flag=True)
+    assert sorted(t.merged_ko_rows()["o_orderkey"]) == sorted(even.ko_rows["o_orderkey"])
+    (three,) = t.run(only=["three"], get_rows_flag=True)
+    merged = list(t.merged_ko_rows()["o_orderkey"])
+    assert len(even.ko_rows) == len(three.ko_rows) == 30
+    assert sorted(merged) == sorted(
+        set(even.ko_rows["o_orderkey"]) | set(three.ko_rows["o_orderkey"]))
+
+
+def test_sample_plan_jobs(spark, sf_dir, tmp_path):
+    """Samples cost one plan per table: run(get_rows_flag=True) runs at
+    most 3 jobs more than run(), the same number with 2 fired checks as
+    with 6, and the HTML report and the export then run none."""
+    from data_quality_spark.session import QualitySession
+
+    def session(n_checks):
+        s = QualitySession(spark)
+        t = s.table_from_parquet(f"{sf_dir}/orders.parquet", "orders",
+                                 index_column="o_orderkey")
+        for m in range(2, n_checks + 2):
+            t.check_custom_condition(f"o_custkey % {m} = 0", rule_id=f"mod{m}")
+        return s, t
+
+    _, base_jobs = _jobs_in_group(spark, session(2)[1].run)
+    jobs = []
+    for n_checks in (2, 6):
+        s, t = session(n_checks)
+        res, n_jobs = _jobs_in_group(spark, lambda: t.run(get_rows_flag=True))
+        assert all(c.flag_ko and len(c.ko_rows) for c in res)
+        jobs.append(n_jobs)
+        _, n_jobs = _jobs_in_group(
+            spark, lambda: s.create_html_output(str(tmp_path / f"r{n_checks}")))
+        assert n_jobs == 0
+        _, n_jobs = _jobs_in_group(
+            spark,
+            lambda: s.create_export_details_excel(str(tmp_path / f"x{n_checks}")))
+        assert n_jobs == 0
+    assert jobs[0] == jobs[1] <= base_jobs + 3
 
 
 def test_results_df_matches_check_lists(spark, sf_dir):
